@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Json
+import graft.{ForkJoin, Json}
 import graft.operators.Kpi
 import graft.sinks.KeyValueSink
 import graft.sources.{Csv, FactStore}
@@ -72,6 +72,11 @@ object Pipeline {
         catch {
           case _: java.util.concurrent.TimeoutException =>
             task.cancel(true) // interrupt the hung stage before retrying
+            // give it up to one more timeout to stop: a stage waiting in
+            // [[graft.ForkJoin]] cancels its children's Spark jobs and
+            // returns once they have stopped, so a retry never races the
+            // timed-out attempt's writers
+            runner.join(timeoutMs)
             throw new StageTimeoutException(s"stage exceeded $timeoutMs ms")
           case e: java.util.concurrent.ExecutionException =>
             throw e.getCause // surface the stage's own failure, not the wrapper
@@ -133,14 +138,16 @@ object Pipeline {
   def validate(spark: SparkSession, root: String, files: BatchFiles): Validator.Report = {
     def typed(schema: org.apache.spark.sql.types.StructType, paths: Seq[String]) =
       Csv.read(spark, schema, paths)
+    def checks(paths: Seq[String], schema: org.apache.spark.sql.types.StructType,
+        contract: Validator.Contract) =
+      paths.map(f => () => Validator.validateFile(spark, f, typed(schema, Seq(f)), contract))
 
-    val perFile =
-      files.products.flatMap(f => Validator.validateFile(spark, f,
-        typed(Csv.productsSchema, Seq(f)), Validator.productsContract)) ++
-        files.orders.flatMap(f => Validator.validateFile(spark, f,
-          typed(Csv.ordersSchema, Seq(f)), Validator.ordersContract)) ++
-        files.items.flatMap(f => Validator.validateFile(spark, f,
-          typed(Csv.orderItemsSchema, Seq(f)), Validator.orderItemsContract))
+    // the per-file checks are independent: run them concurrently, report in
+    // file order
+    val perFile = ForkJoin.all(spark)(
+      checks(files.products, Csv.productsSchema, Validator.productsContract) ++
+        checks(files.orders, Csv.ordersSchema, Validator.ordersContract) ++
+        checks(files.items, Csv.orderItemsSchema, Validator.orderItemsContract): _*).flatten
 
     val integrity =
       if (perFile.nonEmpty) Nil
@@ -181,8 +188,9 @@ object Pipeline {
 
   /** Transformation stage (reference transform_task.py:349-447): validate the
     * batch into the date-partitioned fact store, then compute KPIs for the
-    * batch's new dates (D1/F1 incremental recompute) from FILE-PRUNED reads
-    * of that store, and upsert by date partition.
+    * batch's new dates (D1/F1 incremental recompute: the order dates the
+    * upsert staged) from FILE-PRUNED reads of that store, and upsert by date
+    * partition.
     *
     * The reference loads its full validated history and filters the target
     * dates late (transform_task.py:409-413) — a full-history scan per daily
@@ -191,14 +199,7 @@ object Pipeline {
     * open only those partitions (`PartitionFilters`), so a daily batch costs
     * one day of data no matter how much history has accumulated.
     */
-  def transform(spark: SparkSession, root: String, batchId: String,
-      newOrdersPaths: Seq[String]): (Long, Long) = {
-    // D1: distinct dates present in the NEW orders files drive the recompute.
-    val newDates = Csv.read(spark, Csv.ordersSchema, newOrdersPaths)
-      .select(to_date(col("created_at")).as("d")).distinct()
-      .collect().map(_.getDate(0)).toSeq
-    if (newDates.isEmpty) return (0L, 0L)
-
+  def transform(spark: SparkSession, root: String, batchId: String): (Long, Long) = {
     val products = Csv.read(spark, Csv.productsSchema,
       Csv.listCsv(spark, s"$root/validated/products"))
     val orders = Csv.read(spark, Csv.ordersSchema,
@@ -207,23 +208,30 @@ object Pipeline {
       Csv.listCsv(spark, s"$root/validated/order_items"))
 
     val factsDir = s"$root/facts"
-    FactStore.upsertBatch(batchId,
+    // D1: the order dates the batch staged drive the recompute
+    val newDates = FactStore.upsertBatch(batchId,
       Kpi.consolidated(products, orders, items),
       Kpi.ordersEnriched(orders, items),
       Kpi.itemsDaily(items),
       factsDir)
+    if (newDates.isEmpty) return (0L, 0L)
 
     val category = Kpi.categoryKpisFromStore(spark, factsDir, newDates)
       .withColumn("date_key", col("order_date")).drop("order_date")
       .persist()
     val daily = Kpi.orderKpisFromStore(spark, factsDir, newDates).persist()
 
+    // the two sinks are independent: upsert them concurrently. Counts come
+    // from the cached frames — without the persist they would re-run the
+    // whole KPI DAG a second time
+    def upsert(kpis: DataFrame, table: String) = () => {
+      KeyValueSink.upsertPartitioned(kpis, s"$root/kpis/$table", "date_key")
+      kpis.count()
+    }
     try {
-      KeyValueSink.upsertPartitioned(category, s"$root/kpis/category_kpis", "date_key")
-      KeyValueSink.upsertPartitioned(daily, s"$root/kpis/daily_kpis", "date_key")
-      // counts come from the cached frames — without the persist they would
-      // re-run the whole KPI DAG a second time
-      (category.count(), daily.count())
+      val Seq(c, d) = ForkJoin.all(spark)(
+        upsert(category, "category_kpis"), upsert(daily, "daily_kpis"))
+      (c, d)
     } finally {
       category.unpersist(false)
       daily.unpersist(false)
@@ -349,7 +357,7 @@ object Pipeline {
             f => Csv.moveFile(spark, s"$root/raw", s"$root/validated", f)))
           val (c, d) =
             try withRetry(timeoutMs = transformTimeoutMs, stage = Some("transform"))(
-              transform(spark, root, date, files.orders.map(toValidated)))
+              transform(spark, root, date))
             catch { case e: Throwable =>
               // compensate: a failed transform must leave the batch exactly
               // as delivered, so the next poll can retry it end-to-end

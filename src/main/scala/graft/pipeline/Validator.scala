@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.ForkJoin
 import graft.operators.Quality
 import graft.sources.Csv
 
@@ -41,9 +42,10 @@ object Validator {
   }
 
   /** V1 + A5 on one file: header presence from a header-only read, then a
-    * single null-count aggregate over the typed frame.
+    * single null-count aggregate over the typed frame (built only once the
+    * header has passed, so an unreadable file is a rejection, not a crash).
     */
-  def validateFile(spark: SparkSession, file: String, df: DataFrame,
+  def validateFile(spark: SparkSession, file: String, df: => DataFrame,
       contract: Contract): Option[Rejection] = {
     val headerCols =
       try Csv.readHeaderColumns(spark, file)
@@ -72,8 +74,10 @@ object Validator {
     def firstFive(child: DataFrame, key: String, parent: DataFrame, pkey: String): Seq[Long] =
       Quality.fkViolationReport(child, key, parent, pkey, 5)
         .collect().map(_.getLong(0)).toSeq
-    val orphanOrders = firstFive(items, "order_id", orders, "order_id")
-    val orphanProducts = firstFive(items, "product_id", products, "id")
+    // the two FK checks are independent: run them concurrently
+    val Seq(orphanOrders, orphanProducts) = ForkJoin.all(items.sparkSession)(
+      () => firstFive(items, "order_id", orders, "order_id"),
+      () => firstFive(items, "product_id", products, "id"))
     (if (orphanOrders.nonEmpty)
       Seq(s"order_items.order_id not in orders (first 5): ${orphanOrders.mkString(", ")}")
     else Nil) ++

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ForkJoin
+
 /** Date-partitioned physical layout for validated facts — the storage design
   * the incremental recompute path needs at 100 TB.
   *
@@ -74,9 +76,13 @@ object FactStore {
     *    ([[assertNoCrossBatchRedelivery]]);
     *  - date-pruned reads are unaffected (`order_date` stays the leading
     *    partition key).
+    *
+    * Returns the order dates the batch staged (read off its staged
+    * `orders_enriched` partition dirs, so no extra scan). A batch that stages
+    * no order date changes nothing: the store is left exactly as it was.
     */
   def upsertBatch(batchId: String, consolidated: DataFrame, ordersEnriched: DataFrame,
-      itemsDaily: DataFrame, storeDir: String): Unit = {
+      itemsDaily: DataFrame, storeDir: String): Seq[java.sql.Date] = {
     require(batchId != SealedId,
       s"batch id $SealedId is reserved for compaction ([[compact]])")
     val spark = consolidated.sparkSession
@@ -91,25 +97,30 @@ object FactStore {
     val tmpRoot = new org.apache.hadoop.fs.Path(s"$storeDir/.ingest_tmp/$batchId")
     val fs = tmpRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(tmpRoot, true)
-    try {
+    val dates = try {
       // 1. STAGE the batch's layers OUTSIDE the live tables: nothing is
       //    visible to a pruned reader — or left behind for one by a crash —
-      //    until the delivery has been validated
-      writePartitioned(consolidated.withColumn("batch_id", lit(batchId)),
-        s"$tmpRoot/consolidated", SaveMode.Overwrite)
-      writePartitioned(ordersEnriched.withColumn("batch_id", lit(batchId)),
-        s"$tmpRoot/orders_enriched", SaveMode.Overwrite)
-      upsertItemsDaily(itemsDaily.withColumn("batch_id", lit(batchId)), tmpRoot.toString)
-      // 2. VALIDATE the staged delivery against the store BEFORE any of it
-      //    lands: a crash anywhere up to here leaves the live tables exactly
-      //    as stashed — consistent, never double-counting (previously the
-      //    check ran after the write, so a crash in that window exposed
-      //    unvalidated layers until a corrective rerun)
-      assertNoCrossBatchRedelivery(spark, storeDir, tmpRoot.toString, batchId)
-      // 3. PROMOTE: rename the staged layer dirs into the live tables
-      promoteStagedLayers(spark, storeDir, tmpRoot.toString, batchId)
-      syncCatalog(spark, storeDir)
-      clearStash(spark, storeDir, batchId) // accepted: old contribution gone
+      //    until the delivery has been validated. The three writes are
+      //    independent and run concurrently; all have stopped before this
+      //    returns or throws, so the cleanup below never races a writer
+      stageLayers(spark, tmpRoot.toString, batchId, consolidated, ordersEnriched, itemsDaily)
+      // the staged delivery's date partitions, read off the directory names
+      val staged = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+          s"$tmpRoot/orders_enriched/order_date=*/batch_id=$batchId"))).toSeq.flatten
+        .map(_.getPath.getParent.getName.stripPrefix("order_date=")).sorted
+      if (staged.nonEmpty) {
+        // 2. VALIDATE the staged delivery against the store BEFORE any of it
+        //    lands: a crash anywhere up to here leaves the live tables
+        //    exactly as stashed — consistent, never double-counting
+        //    (previously the check ran after the write, so a crash in that
+        //    window exposed unvalidated layers until a corrective rerun)
+        assertNoCrossBatchRedelivery(spark, storeDir, tmpRoot.toString, batchId, staged)
+        // 3. PROMOTE: rename the staged layer dirs into the live tables
+        promoteStagedLayers(spark, storeDir, tmpRoot.toString, batchId)
+        syncCatalog(spark, storeDir)
+        clearStash(spark, storeDir, batchId) // accepted: old contribution gone
+      }
+      staged
     } catch { case e: Throwable =>
       // leave the store exactly as before the bad upsert: any promoted new
       // layers come out AND the batch's previous layers go back in
@@ -120,6 +131,26 @@ object FactStore {
     } finally {
       fs.delete(tmpRoot, true)
     }
+    // nothing staged: put the stashed layers back, the store is unchanged
+    // (outside the catch, whose drop step would delete restored layers)
+    if (dates.isEmpty) restoreBatchLayers(spark, storeDir, batchId)
+    // a null order date stages the default partition, which no KPI selects
+    dates.filterNot(_ == DefaultPartition).map(java.sql.Date.valueOf)
+  }
+
+  /** Hive's directory name for a null partition value. */
+  private val DefaultPartition = "__HIVE_DEFAULT_PARTITION__"
+
+  /** Writes the three layers of one batch (or of a full-fixture build) under
+    * `root`, concurrently.
+    */
+  private def stageLayers(spark: SparkSession, root: String, batchId: String,
+      consolidated: DataFrame, ordersEnriched: DataFrame, itemsDaily: DataFrame): Unit = {
+    def tagged(df: DataFrame) = df.withColumn("batch_id", lit(batchId))
+    ForkJoin.all(spark)(
+      () => writePartitioned(tagged(consolidated), s"$root/consolidated", SaveMode.Overwrite),
+      () => writePartitioned(tagged(ordersEnriched), s"$root/orders_enriched", SaveMode.Overwrite),
+      () => upsertItemsDaily(tagged(itemsDaily), root))
   }
 
   /** The store's layering contract: every order is delivered by exactly ONE
@@ -139,15 +170,11 @@ object FactStore {
     * `basePath`, so partition columns survive) — no full-store listing.
     */
   private def assertNoCrossBatchRedelivery(spark: SparkSession, storeDir: String,
-      stagedRoot: String, batchId: String): Unit = {
+      stagedRoot: String, batchId: String, dates: Seq[String]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val table = new org.apache.hadoop.fs.Path(s"$storeDir/orders_enriched")
     val fs = table.getFileSystem(conf)
     if (!fs.exists(table)) return
-    // the staged delivery's date partitions, read off the directory names
-    val dates = fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$stagedRoot/orders_enriched/order_date=*/batch_id=$batchId"))
-      .map(_.getPath.getParent.getName.stripPrefix("order_date=")).toSeq
     val existingDirs = dates.map(d => s"$storeDir/orders_enriched/order_date=$d")
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
       .filter(p => fs.listStatus(new org.apache.hadoop.fs.Path(p)).nonEmpty)
@@ -458,11 +485,7 @@ object FactStore {
     if (!markerPath.exists()) {
       val (cons, orders, items) = build(spark)
       // full-fixture build: the whole corpus is one "batch" layer
-      writePartitioned(cons.withColumn("batch_id", lit("full")),
-        s"$dir/consolidated", SaveMode.Overwrite)
-      writePartitioned(orders.withColumn("batch_id", lit("full")),
-        s"$dir/orders_enriched", SaveMode.Overwrite)
-      upsertItemsDaily(items.withColumn("batch_id", lit("full")), dir)
+      stageLayers(spark, dir, "full", cons, orders, items)
       markerPath.createNewFile()
     }
     // catalog registration (schema inference + partition recovery) is part

@@ -1,11 +1,41 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.TaskContext
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Pipeline, Validator}
 import graft.sinks.KeyValueSink
+
+/** Executor-side probes for the concurrency tests. In local mode tasks run
+  * in this JVM, so they and the test see the same counters.
+  */
+object ForkJoinProbe {
+  val started = new AtomicInteger(0)
+  val running = new AtomicInteger(0)
+
+  /** A slow write: sleeps 1.5 s per row, counted while it runs. */
+  val slow: Double => Double = { x =>
+    started.incrementAndGet(); running.incrementAndGet()
+    try { Thread.sleep(1500); x } finally running.decrementAndGet()
+  }
+
+  /** A failing write: throws once a slow sibling is running (or after 10 s). */
+  val failing: String => String = { _ =>
+    val t0 = System.nanoTime()
+    while (started.get == 0 && System.nanoTime() - t0 < 10e9) Thread.sleep(10)
+    throw new IllegalStateException("planted write failure")
+  }
+
+  /** A hung task: blocks until it is killed (or 60 s pass). */
+  val hang: Int => Int = { x =>
+    val t0 = System.nanoTime()
+    while (!TaskContext.get().isInterrupted() && System.nanoTime() - t0 < 60e9) Thread.sleep(10)
+    x
+  }
+}
 
 /** End-to-end batch lifecycle tests (reference README.md:330-453 "Simulation
   * Steps", automated — the reference has no tests at all, SURVEY.md §5.1).
@@ -594,6 +624,146 @@ class PipelineSpec extends AnyFunSuite {
     assert(afterReject.size == 2)
     val rejectLog = (afterReject.toSet -- afterOk.toSet).head
     assert(Files.readString(rejectLog).contains("REJECTED"))
+  }
+
+  test("csv: a part without the optional returned_at column binds created_at by name") {
+    val root = setupBatch("noreturned")
+    // header order_id,product_id,sale_price,created_at: read by position,
+    // created_at would land in returned_at and A5 would reject the batch
+    write(root, "raw/order_items/2024-01-01/order_items_part0.csv",
+      """order_id,product_id,sale_price,created_at
+        |10,1,10.0,2024-01-01 00:00:00
+        |10,2,30.0,2024-01-01 00:00:00
+        |20,1,5.0,2024-01-01 00:00:00""".stripMargin)
+    val r = Pipeline.run(spark, root.toString, "2024-01-01")
+    assert(r == Pipeline.Succeeded("2024-01-01", 2L, 1L), s"got $r")
+    val daily = KeyValueSink.readTable(spark, s"$root/kpis/daily_kpis").head()
+    assert(daily.getAs[Double]("total_revenue") == 45.0)
+    assert(daily.getAs[Int]("total_items_sold") == 3)
+  }
+
+  test("csv: reordered header columns bind by name, not position") {
+    val root = setupBatch("reorder")
+    // V1 passes this header; read by position the two ids would swap
+    write(root, "raw/orders/2024-01-01/orders_part0.csv",
+      """user_id,order_id,created_at
+        |100,10,2024-01-01 00:00:00
+        |200,20,2024-01-01 00:00:00""".stripMargin)
+    val r = Pipeline.run(spark, root.toString, "2024-01-01")
+    assert(r.isInstanceOf[Pipeline.Succeeded], s"got $r")
+    val facts = graft.sources.FactStore.ordersEnriched(spark, s"$root/facts")
+      .select("order_id", "user_id", "order_revenue").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(facts == Set((10L, 100L, 40.0), (20L, 200L, 5.0)))
+
+    // parts with different headers in one read: each binds by its own header
+    val canonical = root.resolve("canonical.csv")
+    Files.writeString(canonical, ordersCsv)
+    val mixed = graft.sources.Csv.read(spark, graft.sources.Csv.ordersSchema,
+      Seq(s"$root/processed/orders/2024-01-01/orders_part0.csv", canonical.toString))
+    assert(mixed.columns.toSeq == graft.sources.Csv.ordersSchema.fieldNames.toSeq)
+    val rows = mixed.collect().map(r => (r.getLong(0), r.getLong(1), r.isNullAt(3))).toSeq
+    assert(rows == Seq((10L, 100L, true), (20L, 200L, true), (10L, 100L, true), (20L, 200L, false)))
+  }
+
+  test("a batch whose orders stage no dates leaves the store exactly as it was") {
+    import graft.sources.FactStore
+    import spark.implicits._
+    val root = setupBatch("nodates")
+    assert(Pipeline.run(spark, root.toString, "2024-01-01").isInstanceOf[Pipeline.Succeeded])
+    val facts = s"$root/facts"
+    def store() = Seq(FactStore.consolidated(spark, facts), FactStore.ordersEnriched(spark, facts),
+      FactStore.itemsDaily(spark, facts)).map(_.collect().toSet)
+    def kpis() = Seq("category_kpis", "daily_kpis")
+      .map(t => KeyValueSink.readTable(spark, s"$root/kpis/$t").collect().toSet)
+    val (storeBefore, kpisBefore) = (store(), kpis())
+
+    // a rerun of the batch that delivers no rows: no date to recompute, and
+    // the batch's earlier layers stay in place
+    write(root, "raw/products/products.csv", productsCsv)
+    write(root, "raw/orders/2024-01-01/orders_part0.csv", "order_id,user_id,created_at,returned_at")
+    write(root, "raw/order_items/2024-01-01/order_items_part0.csv",
+      "order_id,product_id,sale_price,returned_at,created_at")
+    assert(Pipeline.run(spark, root.toString, "2024-01-01") == Pipeline.Succeeded("2024-01-01", 0L, 0L))
+    assert(store() == storeBefore && kpis() == kpisBefore)
+
+    // the same at the store: items staged without any order land nowhere
+    val noOrders = FactStore.ordersEnriched(spark, facts).limit(0).drop("batch_id")
+    val noItems = FactStore.consolidated(spark, facts).limit(0).drop("batch_id")
+    val items = Seq((java.sql.Date.valueOf("2024-01-01"), 7L)).toDF("date_key", "total_items_sold_daily")
+    assert(FactStore.upsertBatch("2024-01-01", noItems, noOrders, items, facts).isEmpty)
+    assert(store() == storeBefore)
+    assert(!Files.exists(Paths.get(s"$facts/.ingest_tmp/2024-01-01")))
+    assert(!Files.exists(Paths.get(s"$facts/.rerun_tmp/2024-01-01")))
+  }
+
+  test("upsertBatch: a failed staged write rolls back only after its sibling writes stop") {
+    import graft.sources.FactStore
+    import org.apache.spark.sql.functions.{col, udf}
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-stagefail").toString + "/store"
+    def oe(rows: (Long, String)*) = rows
+      .map { case (id, d) => (id, id * 10, 0, java.sql.Date.valueOf(d), 5.0) }
+      .toDF("order_id", "user_id", "returned_order_flag", "order_date", "order_revenue")
+    def cons(rows: (Long, String)*) = rows
+      .map { case (id, d) => (id, "CAT_A", java.sql.Date.valueOf(d)) }
+      .toDF("order_id", "category", "order_date")
+    def idaily(d: String) =
+      Seq((java.sql.Date.valueOf(d), 1L)).toDF("date_key", "total_items_sold_daily")
+    assert(FactStore.upsertBatch("b1", cons(1L -> "2024-01-01"), oe(1L -> "2024-01-01"),
+      idaily("2024-01-01"), dir) == Seq(java.sql.Date.valueOf("2024-01-01")))
+    def store() = Seq(FactStore.consolidated(spark, dir), FactStore.ordersEnriched(spark, dir),
+      FactStore.itemsDaily(spark, dir)).map(_.collect().toSet)
+    val before = store()
+
+    // rerun of b1: the consolidated write fails while the orders write is
+    // still running (the repartition keeps each UDF inside its write job)
+    ForkJoinProbe.started.set(0)
+    val failing = cons(2L -> "2024-01-02").repartition(1)
+      .withColumn("category", udf(ForkJoinProbe.failing).apply(col("category")))
+    val slow = oe(2L -> "2024-01-02").repartition(1)
+      .withColumn("order_revenue", udf(ForkJoinProbe.slow).apply(col("order_revenue")))
+    val e = intercept[Exception] {
+      FactStore.upsertBatch("b1", failing, slow, idaily("2024-01-02"), dir)
+    }
+    assert(ForkJoinProbe.started.get > 0, "the sibling write never ran concurrently")
+    assert(ForkJoinProbe.running.get == 0, "upsertBatch threw while a sibling write was running")
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("planted write failure")), e.toString)
+    assert(store() == before, "a failed rerun must leave the store as it was")
+    assert(!Files.exists(Paths.get(s"$dir/.ingest_tmp/b1")))
+  }
+
+  test("concurrent validation keeps today's rejection order") {
+    val root = setupBatch("rejorder")
+    // products fails its null check (a Spark job), orders its header check
+    // (none): the orders check finishes first, yet products is listed first
+    write(root, "raw/products/products.csv",
+      "id,sku,cost,category,retail_price\n1,sku1,,CAT_A,2.0")
+    write(root, "raw/orders/2024-01-01/orders_part0.csv",
+      "user_id,created_at\n100,2024-01-01 00:00:00")
+    val rej = Pipeline.run(spark, root.toString, "2024-01-01").asInstanceOf[Pipeline.Rejected]
+    assert(rej.reasons.map(r => (r.file.split('/').last, r.reason)) == Seq(
+      "products.csv" -> "Null values in critical columns: cost=1",
+      "orders_part0.csv" -> "Missing required columns: order_id"))
+  }
+
+  test("retry wrapper: a timed-out attempt's fork-joined jobs are cancelled before the retry") {
+    import scala.jdk.CollectionConverters._
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    var atRetry = Seq.empty[String]
+    var calls = 0
+    val out = Pipeline.withRetry(attempts = 2, initialDelayMs = 1, timeoutMs = 2000) {
+      calls += 1
+      if (calls == 1) ForkJoin.all(spark)(Seq.fill(2)(() =>
+        try spark.sparkContext.parallelize(Seq(1), 1).map(ForkJoinProbe.hang).count()
+        catch { case e: Exception => ended.add(String.valueOf(e.getMessage)); throw e }): _*)
+      else atRetry = ended.asScala.toSeq
+      "ok"
+    }
+    assert(out == "ok" && calls == 2)
+    assert(atRetry.size == 2 && atRetry.forall(_.contains("cancelled")),
+      s"child jobs still running when the retry started: $atRetry")
   }
 
   test("foreachPartition KV write: no driver collect, upsert semantics") {
