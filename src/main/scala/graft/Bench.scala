@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at the given SF, one JSON
   * line to stdout (driver contract). An untimed warm-up query absorbs
@@ -125,61 +124,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE sizes every shuffle DOWN from its initial count, never up — so the
-    // grow direction must be explicit, sized from the data like every other
-    // fan-out in this engine. Measured at sf10 (PERF.md r9): the graph
-    // loops' super-linear per-round term was reduce-side SPILL at
-    // `shuffle.partitions` = cpus (LPA −34% once raised), while a flat high
-    // constant (512) regressed small fixtures ~3× on pure exchange overhead
-    // — hence ~32 MB of input parquet per initial reduce partition, clamped
-    // to [cpus, 1024]: small fixtures stay at cpus (plans unchanged — 8 MB
-    // per partition was measured +20% pure overhead at sf1), sf10 gets ~57.
-    // A production cluster sets the same knob per deployment; the harness
-    // mirrors that sizing rule.
-    // (shared recursive walker: a Spark-style parquet DIRECTORY fixture
-    // would otherwise measure ~0 bytes and silently drop this sizing)
-    val fixtureBytes = sources.ArtifactStore.parquetBytes(sfDir)
-    val initialParts =
-      math.min(1024L, math.max(cpus.toLong, fixtureBytes / (32L << 20)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-FS directory listing is cheap; a distributed listing job for a
-      // few thousand partition dirs costs more than it saves (store reads
-      // resolve partitions from catalog metadata anyway)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      // Always use the SORT-BASED shuffle writer — the path every at-scale
-      // deployment runs (bypass-merge only fires when reduce partitions ≤
-      // 200, which never holds past toy scale). The bypass writer opens one
-      // file PER REDUCE PARTITION per map task (M×R creates + a transferTo
-      // merge + deletes); profiled at sf0.1 (r13 session 2, jstack samples)
-      // those filesystem calls — open0/unmap0/write — were ~85% of the
-      // iterative loops' executor cpu: a 6-half-step SALSA loop measured
-      // 27–30 executor-cpu-s bypass vs 3.4–4.2 sort-based on the same box
-      // (wall 3.1 → 1.7 s). Zero semantic effect; it only pins WHICH
-      // writer moves the same bytes, aligning the measured path with the
-      // production one.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // Scratch space (shuffle files, block-manager disk store) on the
-      // fastest local storage available — tmpfs when the box has one.
-      // jstack samples of the task threads (r13 session 3) put the bulk of
-      // the residual per-task executor cpu inside DiskBlockObjectWriter
-      // file opens/writes on this sandbox's virtio ext4: sim_knn_graph
-      // measured 7.8 executor-cpu-s with /tmp scratch vs 0.72 with tmpfs —
-      // identical plans, rows and shuffle bytes, the delta is purely
-      // filesystem syscall cost under the same M files the sort writer
-      // always creates. Production precedent is first-class: Spark ships
-      // `spark.kubernetes.local.dirs.tmpfs` for exactly this, and bare-metal
-      // deployments point local.dir at NVMe. Parameterized so any
-      // environment (or a RAM-tight sf10 side run) can override it.
-      .config("spark.local.dir", graft.Scale.scratchDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus()
+    val spark = Session.start(cpus, fixtureDir = Some(sfDir))
     val listener = new ResourceListener
     spark.sparkContext.addSparkListener(listener)
     // warm-up: JVM/codegen/IO init, untimed
@@ -275,7 +221,7 @@ object Bench {
     def isInvalid(rs: Seq[QRec], load: Double): Boolean = {
       val wall = rs.filter(_.ok).map(_.wall).sum
       val gcS = rs.map(_.gcMs).sum / 1000.0
-      gcS > 0.25 * wall || load > 1.5 * cpus.toInt
+      gcS > 0.25 * wall || load > 1.5 * cpus
     }
     def suiteTotal(rs: Seq[QRec]): Double =
       rs.filter(_.ok).map(_.wall).sum

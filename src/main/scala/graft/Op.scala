@@ -10,24 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Op(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String] = None,
-    blocker: Option[String] = None)
+    oracle: Option[String] = None)
 
 object Op {
   /** Convenience for oracle-backed ops. */
   def sql(name: String, oracleSql: String)(
       fn: (SparkSession, String) => DataFrame): Op =
     Op(name, fn, Some(oracleSql))
-
-  /** Convenience for rows-only-checked ops. Rows-only is the EXCEPTION, not
-    * a softer default: every such op must state WHY no DuckDB oracle can
-    * bit-match it (sketch internals, float summation order, sequential
-    * state...). The note is machine-checked by RegistrySpec, so an oracle-less
-    * op without a stated blocker fails the build.
-    */
-  def rowsOnly(name: String, blocker: String)(
-      fn: (SparkSession, String) => DataFrame): Op = {
-    require(blocker.trim.nonEmpty, s"$name: rows-only op needs a blocker note")
-    Op(name, fn, None, Some(blocker))
-  }
 }

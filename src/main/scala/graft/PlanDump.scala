@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool beside [[Verify]]/[[Bench]]: print `explain("formatted")` for
@@ -19,14 +18,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = if (args.length > 1) args.drop(1).toSeq else headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start(fixtureDir = Some(sfDir), logLevel = "ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")
       println(SparkEntry.queries(n)(spark, sfDir).queryExecution

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only stage profiler (guide §1: measure first, §7.1 without a UI).
   * Runs ONE registered query and prints a per-stage table — wall, executor
@@ -46,22 +45,7 @@ object Prof {
     val sfDir = args(0)
     val qName = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val fixtureBytes = sources.ArtifactStore.parquetBytes(sfDir)
-    val initialParts =
-      math.min(1024L, math.max(cpus.toLong, fixtureBytes / (32L << 20)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0") // as in Bench
-      .config("spark.local.dir", graft.Scale.scratchDir) // as in Bench
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(fixtureDir = Some(sfDir))
     val fn = SparkEntry.queries.getOrElse(qName,
       sys.error(s"unknown query: $qName"))
     // warm-up run: stores, memos, codegen — untimed, unprofiled

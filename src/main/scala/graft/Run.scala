@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.Pipeline
 
 /** CLI entry point for the batch pipeline — the reference's Lambda + Step
@@ -35,19 +33,7 @@ object Run {
         "<root> compact <horizon> | <root> compact-manifest [--gc]")
     val (root, date) = (args(0), args(1))
     val reset = args.length == 3 && args(2) == "--reset"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-FS directory listing is cheap; a distributed listing job for a
-      // few thousand partition dirs costs more than it saves (store reads
-      // resolve partitions from catalog metadata anyway)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     // the coordinated entry: ledger poll + exactly-once trigger guard
     // (re-running a completed batch is a no-op, like the reference Lambda);
     // --reset is the operator escape hatch to re-admit a batch

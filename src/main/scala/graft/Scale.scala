@@ -96,7 +96,7 @@ object Scale {
     * else tmpfs (`/dev/shm`) when the box has one, else the JVM tmpdir.
     * Spark creates a per-session `spark-<uuid>` subdirectory underneath and
     * removes it on shutdown, so concurrent sessions never collide. See
-    * Bench.scala for the measurement that motivates the tmpfs default.
+    * Session.scala for the measurement that motivates the tmpfs default.
     */
   def scratchDir: String = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
     val shm = new java.io.File("/dev/shm")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,24 +8,7 @@ object Verify {
     // (dev-only — the driver always passes exactly two args)
     val Array(sfDir, outDir) = args.take(2)
     val nameFilters = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-FS directory listing is cheap; a distributed listing job for a
-      // few thousand partition dirs costs more than it saves (store reads
-      // resolve partitions from catalog metadata anyway)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      // sort-based shuffle writer, as in Bench (the at-scale path; results
-      // are writer-independent — this only keeps the two mains consistent)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // scratch on the fastest local storage (tmpfs if present) — see
-      // Bench.scala for the measurement; env-overridable, semantics-free
-      .config("spark.local.dir", graft.Scale.scratchDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(fixtureDir = Some(sfDir))
     new java.io.File(outDir).mkdirs()
     // Fixture-schema pre-flight: dump the loaded per-table schemas beside the
     // results and shout any drift from the operator contract BEFORE the query

@@ -1,8 +1,8 @@
 package graft.sources
 
 /** Content-stamped build-once artifact directories — the shared mechanics
-  * behind every derived-index store (the graph edge store, the search
-  * index, the trained tokenizer, the vector codes store).
+  * behind every derived-index store (the fixture fact store, the graph edge
+  * store, the search index, the trained tokenizer, the vector codes store).
   *
   * The store dir name bakes in (a) the artifact name + version — bump on
   * any schema/build change — and (b) a stamp of the source fixture's
@@ -26,8 +26,8 @@ object ArtifactStore {
     * recursed here, skipping `_SUCCESS`/`.crc` bookkeeping — so both the
     * content stamp and the byte total survive either layout instead of
     * silently collapsing to empty on directory-shaped fixtures (ADVICE r9;
-    * Bench's AQE initial-partition sizing shares this walker for exactly
-    * that reason).
+    * [[graft.Session]]'s AQE initial-partition sizing shares this walker for
+    * exactly that reason).
     */
   private def parquetFiles(srcDir: String): Seq[(String, java.io.File)] = {
     def walk(rel: String, f: java.io.File): Seq[(String, java.io.File)] =
@@ -43,7 +43,7 @@ object ArtifactStore {
 
   /** Total data bytes of the fixture dir's parquet entries (flat files or
     * Spark-style directories) — the one fixture-size estimate shared by the
-    * stores and Bench's reduce-partition sizing.
+    * stores and [[graft.Session]]'s reduce-partition sizing.
     */
   def parquetBytes(srcDir: String): Long = parquetFiles(srcDir).map(_._2.length).sum
 

@@ -5,27 +5,15 @@ import java.security.MessageDigest
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine-wide partitioning-invariance sweep: every EXACT registered
-  * operator must produce bit-identical rows when the shuffle partitioning
-  * changes — the property that makes results reproducible on any cluster
-  * size, which the per-op DuckDB oracle cannot check (it compares one run).
-  * Sketch-backed ops are excluded with cause: their merge trees are
-  * partitioning-shaped by design (HLL/GK/Misra-Gries accumulate in
-  * partition order), which is exactly why they are registered rows-only
-  * with error-bound specs instead of hash oracles.
+/** The engine-wide partitioning-invariance sweep: every registered operator
+  * must produce bit-identical rows when the shuffle partitioning changes —
+  * the property that makes results reproducible on any cluster size, which
+  * the per-op DuckDB oracle cannot check (it compares one run). Since r11
+  * the sketch ops are exact integer arithmetic (KMV, Bloom, Count-Min), so
+  * no op is exempt.
   */
 class DeterminismSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
-
-  /** Partitioning-sensitive by design — EMPTY since r11: the r10 KMV/Bloom
-    * conversions made the uniques/decontamination sketches exact integer
-    * arithmetic, and r11 converted the last holdout (Misra-Gries heavy
-    * hitters, whose survivor set WAS merge-order-shaped) to a Count-Min
-    * sketch whose counters are plain integer sums. Every registered op now
-    * runs the 3-vs-7-partition proof. Kept as a named hook (with this
-    * history) so a future genuinely order-shaped op opts out loudly.
-    */
-  private val sketchOps = Set.empty[String]
 
   private def canon(df: DataFrame): String = {
     val rows = df.collect().map(_.toString).sorted
@@ -39,8 +27,7 @@ class DeterminismSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val failures = scala.collection.mutable.Buffer[String]()
     try {
-      for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-           if !sketchOps(name)) {
+      for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
         spark.conf.set("spark.sql.shuffle.partitions", "3")
         val a = canon(fn(spark, sf))
         spark.catalog.clearCache()

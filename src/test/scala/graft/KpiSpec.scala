@@ -8,20 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Kpi
 
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.start(cpus = 4, warehouseDir =
+    Some(java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
   val sf: String = "/root/testdata/sf0.001"
 }
 

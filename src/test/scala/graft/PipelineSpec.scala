@@ -697,6 +697,37 @@ class PipelineSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(s"$facts/.rerun_tmp/2024-01-01")))
   }
 
+  test("fixture store: a part file rewritten in place in a directory fixture rebuilds the store") {
+    import graft.sources.FactStore
+    import spark.implicits._
+    val src = Files.createTempDirectory("graft-dirfixture")
+    def partFile(n: Int): Path = {
+      val dir = Files.createTempDirectory("graft-dirfixture-part")
+      (1 to n).map(i => (i.toLong, java.sql.Date.valueOf("2024-01-01"))).toDF("order_id", "order_date")
+        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get()
+    }
+    val part = src.resolve("orders.parquet/part-00000.parquet")
+    Files.createDirectories(part.getParent)
+    Files.copy(partFile(2), part)
+    val builds = new AtomicInteger(0)
+    def ensure(): String = FactStore.ensureFixture(spark, src.toString, sp => {
+      builds.incrementAndGet()
+      val o = sp.read.parquet(s"$src/orders.parquet")
+      (o, o, o.groupBy($"order_date".as("date_key")).count())
+    })
+    val first = ensure()
+    assert(FactStore.ordersEnriched(spark, first).count() == 2)
+    // rewrite the part file's bytes in place: the `orders.parquet` directory
+    // entry keeps its mtime and length, only the file inside changes
+    val mtime = part.toFile.lastModified()
+    Files.write(part, Files.readAllBytes(partFile(3)))
+    assert(part.toFile.setLastModified(mtime + 10000))
+    val second = ensure()
+    assert(builds.get == 2 && second != first, "stale fixture store served")
+    assert(FactStore.ordersEnriched(spark, second).count() == 3)
+  }
+
   test("upsertBatch: a failed staged write rolls back only after its sibling writes stop") {
     import graft.sources.FactStore
     import org.apache.spark.sql.functions.{col, udf}

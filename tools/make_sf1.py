@@ -12,9 +12,9 @@ lineitem row draws its l_orderkey from a seeded Zipf (exponent s, default
 over the full replicated key domain instead of the stride copy — the
 pathological hot-key shape that makes one reduce partition a straggler in
 a shuffled join. The original block is kept verbatim so every sampled key
-still resolves (left-join semantics hold either way). Used by
-tools/SkewProbe.scala to demonstrate AQE's skew-join split on the plain
-join and the salted / skew-split joins staying flat.
+still resolves (left-join semantics hold either way). PERF.md "The skew
+story, finally under measurement" (Round 12) records AQE's skew-join split
+on the plain join and the salted / skew-split joins staying flat on it.
 
 Design: each table is the original plus (factor-1) replica blocks with every
 key domain offset by a per-domain stride (max key + 1), so FK structure,
