@@ -760,17 +760,14 @@ object Relational {
     Op.sql("csv_roundtrip_orders",
       s"""${Tables.domainCtes}
          |SELECT order_id, user_id, created_at, returned_at FROM orders_v""".stripMargin) { (s, d) =>
-      // collision-free cache key + _SUCCESS marker: a crashed or partial
-      // export is rewritten, never silently reused
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val out = s"/tmp/graft_csv_cache/$key/orders"
-      if (!new java.io.File(s"$out/_SUCCESS").exists()) {
+      // built once per fixture content stamp: a fixture rewritten in place
+      // is exported again, and a crashed or partial export is rewritten
+      val out = graft.sources.ArtifactStore.ensure(d, "csvexport", "v1") { dir =>
         Tables.ordersDomain(s, d).write.mode("overwrite")
           .option("header", "true")
           .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-          .csv(out)
-      }
+          .csv(s"$dir/orders")
+      } + "/orders"
       graft.sources.Csv.read(s, graft.sources.Csv.ordersSchema, Seq(out))
     },
 

@@ -1980,20 +1980,15 @@ object TextOps {
   // --------------------------------------------------------------------------
 
   /** Cached fixture export for the interchange round-trip ops: `write` runs
-    * once per (fixture dir, format, source mtime+size) — the stamp means a
-    * regenerated fixture can never serve a stale export — and the _SUCCESS
-    * marker gates readers. ONE implementation for every format so a cache-key
-    * fix can't silently apply to one round trip and not another.
+    * once per (fixture dir, format, fixture content stamp) through
+    * [[graft.sources.ArtifactStore]], so a regenerated fixture can never
+    * serve a stale export and a crashed export is rewritten. ONE
+    * implementation for every format so a cache-key fix can't silently apply
+    * to one round trip and not another.
     */
-  private def cachedExportDir(d: String, fmt: String)(write: String => Unit): String = {
-    val src = new java.io.File(s"$d/documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${src.lastModified}|${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val out = s"/tmp/graft_${fmt}_cache/$key/documents"
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) write(out)
-    out
-  }
+  private def cachedExportDir(d: String, fmt: String)(write: String => Unit): String =
+    graft.sources.ArtifactStore.ensure(d, s"${fmt}export", "v1")(
+      dir => write(s"$dir/documents")) + "/documents"
 
   def ops: Seq[Op] = Seq(
     Op.sql("text_stats",

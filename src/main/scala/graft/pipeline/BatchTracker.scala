@@ -47,9 +47,7 @@ object BatchTracker {
       status: String) {
     def complete: Boolean = ordersArrived && itemsArrived && productsReady
     def missing: Seq[String] =
-      (if (productsReady) Nil else Seq("products master data")) ++
-        (if (ordersArrived) Nil else Seq(s"orders for $batchId")) ++
-        (if (itemsArrived) Nil else Seq(s"order_items for $batchId"))
+      Pipeline.missing(batchId, productsReady, ordersArrived, itemsArrived)
   }
 
   private def trackerDir(root: String) = s"$root/_tracker"
@@ -61,17 +59,10 @@ object BatchTracker {
     * the current state.
     */
   def recordPoll(spark: SparkSession, root: String, date: String): BatchState = {
-    // master data arrives once and is consumed raw/ → validated/ by the first
-    // successful batch (the pipeline leaves it in validated/ on purpose);
-    // later batch dates must track the VALIDATED copy, not a stale raw key —
-    // otherwise day 2 would trigger with a products path that no longer
-    // exists and wrongly reject the whole batch
-    val rawProducts = Csv.listCsv(spark, s"$root/raw/products")
-    val products =
-      if (rawProducts.nonEmpty) rawProducts
-      else Csv.listCsv(spark, s"$root/validated/products")
-    val orders = Csv.listCsv(spark, s"$root/raw/orders/$date")
-    val items = Csv.listCsv(spark, s"$root/raw/order_items/$date")
+    // products track the VALIDATED copy once raw/ is consumed, not a stale
+    // raw key — otherwise day 2 would trigger with a products path that no
+    // longer exists and wrongly reject the whole batch
+    val Pipeline.BatchFiles(products, orders, items) = Pipeline.listBatch(spark, root, date)
 
     // products master ledger: only ever updated when the file is present
     // (lambda_function.py:100-114)

@@ -113,20 +113,32 @@ object Pipeline {
     * for the date (reference lambda_function.py:198-222).
     */
   def completeness(spark: SparkSession, root: String, date: String): Either[Seq[String], BatchFiles] = {
-    // master data arrives once: a batch after the first reuses the validated
-    // products copy (the pipeline leaves it in validated/ on purpose)
+    val files = listBatch(spark, root, date)
+    val lacking = missing(date, files.products.nonEmpty, files.orders.nonEmpty, files.items.nonEmpty)
+    if (lacking.nonEmpty) Left(lacking) else Right(files)
+  }
+
+  /** The batch's delivered files, listed products → orders → order_items.
+    * Master data arrives once and is consumed raw/ → validated/ by the first
+    * successful batch (the pipeline leaves it in validated/ on purpose), so
+    * a later batch date lists the VALIDATED copy when raw/ is empty —
+    * otherwise day 2 would see no products and wrongly stay incomplete.
+    */
+  private[pipeline] def listBatch(spark: SparkSession, root: String, date: String): BatchFiles = {
     val rawProducts = Csv.listCsv(spark, s"$root/raw/products")
     val products =
       if (rawProducts.nonEmpty) rawProducts
       else Csv.listCsv(spark, s"$root/validated/products")
-    val orders = Csv.listCsv(spark, s"$root/raw/orders/$date")
-    val items = Csv.listCsv(spark, s"$root/raw/order_items/$date")
-    val missing =
-      (if (products.isEmpty) Seq("products master data") else Nil) ++
-        (if (orders.isEmpty) Seq(s"orders for $date") else Nil) ++
-        (if (items.isEmpty) Seq(s"order_items for $date") else Nil)
-    if (missing.nonEmpty) Left(missing) else Right(BatchFiles(products, orders, items))
+    BatchFiles(products, Csv.listCsv(spark, s"$root/raw/orders/$date"),
+      Csv.listCsv(spark, s"$root/raw/order_items/$date"))
   }
+
+  /** What an incomplete batch still lacks, one line per absent source. */
+  private[pipeline] def missing(date: String, products: Boolean, orders: Boolean,
+      items: Boolean): Seq[String] =
+    (if (products) Nil else Seq("products master data")) ++
+      (if (orders) Nil else Seq(s"orders for $date")) ++
+      (if (items) Nil else Seq(s"order_items for $date"))
 
   final case class BatchFiles(products: Seq[String], orders: Seq[String], items: Seq[String]) {
     def all: Seq[String] = products ++ orders ++ items

@@ -2,7 +2,8 @@ package graft.sources
 
 /** Content-stamped build-once artifact directories — the shared mechanics
   * behind every derived-index store (the fixture fact store, the graph edge
-  * store, the search index, the trained tokenizer, the vector codes store).
+  * store, the search index, the trained tokenizer, the vector codes store)
+  * and the interchange round-trip ops' fixture exports (csv, jsonl, orc).
   *
   * The store dir name bakes in (a) the artifact name + version — bump on
   * any schema/build change — and (b) a stamp of the source fixture's

@@ -65,9 +65,13 @@ object Layout {
     // by the codec factor, which is the whole question)
     val probeDir = java.nio.file.Files.createTempDirectory("graft-sizeprobe").toString
     val probeN = math.min(n, sampleRows.toLong)
-    df.limit(probeN.toInt).coalesce(1).write.mode(SaveMode.Overwrite).parquet(probeDir)
-    val probeBytes = new java.io.File(probeDir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val probeBytes =
+      try {
+        df.limit(probeN.toInt).coalesce(1).write.mode(SaveMode.Overwrite).parquet(probeDir)
+        new java.io.File(probeDir).listFiles()
+          .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      } finally org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(probeDir), true)
     val bytesPerRow = math.max(1L, probeBytes / probeN)
     val rowsPerFile = math.max(1L, targetFileBytes / bytesPerRow)
     val nFiles = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile)

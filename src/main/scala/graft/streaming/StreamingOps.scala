@@ -2,10 +2,16 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+
+import graft.multimodal.Multimodal
+import graft.operators.{Dedup, Kpi, Search, TextOps}
+import graft.sinks.KeyValueSink
+import graft.sources.{Csv, HistStore, Jsonl, SketchStore}
 
 /** Structured Streaming surface (north-star extension; the reference's
   * "real-time" is Lambda-poll micro-batching at the orchestration level —
@@ -238,6 +244,77 @@ object StreamingOps {
         col("view_id"), col("view_ts"), col("value"))
   }
 
+  /** Drains every file under `dir` that `checkpoint`'s source log has not
+    * seen yet — one `body(batch, batchId)` call per micro-batch of at most
+    * `maxFilesPerTrigger` files — and stops: the reader, sink and trigger
+    * every loop below shares, so a per-micro-batch record hooks in here once.
+    */
+  private def drain(spark: SparkSession, schema: StructType, dir: String, checkpoint: String,
+      maxFilesPerTrigger: Option[Int])(body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+      .parquet(dir)
+      .writeStream
+      .foreachBatch(body)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
+
+  /** `root/batch_id=<batchId>`: where every loop keeps a micro-batch's output. */
+  private def batchDir(root: String, batchId: Long): String =
+    new Path(root, s"batch_id=$batchId").toString
+
+  /** Whether `dir/marker` exists — the one commit test of every loop below,
+    * resolved through the Hadoop FileSystem of the path, so the same loops
+    * run against hdfs:// or s3a:// dirs, not just local ones.
+    */
+  private def committed(spark: SparkSession, dir: Path, marker: String = "_SUCCESS"): Boolean =
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(new Path(dir, marker))
+
+  /** The committed subdirs of `root`: a subdir counts only once its marker
+    * exists, so a torn batch is invisible to every reader.
+    */
+  private def committedDirs(spark: SparkSession, root: String,
+      marker: String = "_SUCCESS"): Seq[String] = {
+    val r = new Path(root)
+    val fs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(r)) Seq.empty
+    else fs.listStatus(r)
+      .filter(st => st.isDirectory && committed(spark, st.getPath, marker))
+      .map(_.getPath.toString).toSeq
+  }
+
+  /** The exactly-once commit step of the append-log loops, despite
+    * foreachBatch's at-least-once replay. Every micro-batch writes into
+    * batchId-keyed Hive-style subdirs (so wholesale reads of a loop's dirs
+    * still see one logical table), and the commit table's `_SUCCESS` is the
+    * marker:
+    *  1. a replayed batch whose `root/batch_id=<n>/_SUCCESS` exists is a no-op;
+    *  2. otherwise `body(batch, committedDirs, batchId)` reads the stored
+    *     state from the committed subdirs of `root` only, and writes its side
+    *     outputs to `batch_id=<n>` subdirs;
+    *  3. the commit table `body` returns is written LAST, with overwrite.
+    *
+    * A torn first attempt (crash between the side and commit writes, or
+    * mid-write) is healed by the replay's overwrite of the same subdirs —
+    * never a second append, which would break the loops' disjoint-ids
+    * contract and emit duplicate/self-matching pairs forever after.
+    */
+  private def commitOnce(root: String)(body: (DataFrame, Seq[String], Long) => DataFrame)
+      : (DataFrame, Long) => Unit = { (batch, batchId) =>
+    val s = batch.sparkSession
+    val table = batchDir(root, batchId)
+    if (!committed(s, new Path(table)))
+      body(batch, committedDirs(s, root), batchId).write.mode("overwrite").parquet(table)
+  }
+
+  /** The distinct days of `batch`'s `ts` column: what a day-scoped
+    * recompute loop recomputes.
+    */
+  private def daysOf(batch: DataFrame, ts: String): Seq[java.sql.Date] =
+    batch.select(to_date(col(ts)).as("d")).distinct().collect().map(_.getDate(0)).toSeq
+
   /** The production dedup loop as a streaming query: each micro-batch of
     * arriving documents is near-dup-checked against the STORED signature
     * index ([[graft.operators.Dedup.incrementalMinhashPairs]]) and then
@@ -245,57 +322,20 @@ object StreamingOps {
     * exactly once, ever, and cross-batch duplicates are still found (batch
     * N's docs match batch M<N's via the index). Streaming the whole corpus
     * from an empty index reproduces the batch pair set EXACTLY (the spec's
-    * invariant).
+    * invariant). Exactly-once via [[commitOnce]] (index written LAST).
     */
   def incrementalDedupLoop(spark: SparkSession, docsStreamDir: String,
       indexDir: String, pairsDir: String, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import org.apache.hadoop.fs.Path
-    val docsSchema = graft.sources.Jsonl.documentsSchema
-    val reader = spark.readStream.schema(docsSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docsStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.Dedup
-        val s = batch.sparkSession
-        // Exactly-once despite foreachBatch's at-least-once replay: every
-        // micro-batch writes into batchId-keyed Hive-style subdirs (so
-        // wholesale reads of indexDir/pairsDir still see one logical table),
-        // the index dir's _SUCCESS is the commit marker, and a replayed batch
-        // whose marker exists is a no-op. A torn first attempt (crash between
-        // the pairs and index writes, or mid-write) is healed by the replay's
-        // overwrite of the same subdirs — never a second append, which would
-        // violate incrementalMinhashPairs' disjoint-ids contract and emit
-        // duplicate/self-matching pairs forever after.
-        val idxRoot = new Path(indexDir)
-        val fs = idxRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val idxBatch = new Path(idxRoot, s"batch_id=$batchId")
-        if (!fs.exists(new Path(idxBatch, "_SUCCESS"))) {
-          // the stored index = committed batches only (marker present) —
-          // resolved through the Hadoop FileSystem of the index path, so the
-          // same loop runs against hdfs:// or s3a:// dirs, not just local
-          val committed =
-            if (fs.exists(idxRoot))
-              fs.listStatus(idxRoot)
-                .filter(st => st.isDirectory &&
-                  fs.exists(new Path(st.getPath, "_SUCCESS")))
-                .map(_.getPath.toString).toSeq
-            else Seq.empty[String]
-          val index =
-            if (committed.nonEmpty) s.read.parquet(committed: _*)
-            else Dedup.minhashIndex(batch.limit(0)) // empty frame, right schema
-          Dedup.incrementalMinhashPairs(batch, index)
-            .write.mode("overwrite").parquet(new Path(pairsDir, s"batch_id=$batchId").toString)
-          // written LAST: its _SUCCESS is what marks the whole batch committed
-          Dedup.minhashIndex(batch).write.mode("overwrite").parquet(idxBatch.toString)
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    drain(spark, Jsonl.documentsSchema, docsStreamDir, checkpoint, maxFilesPerTrigger)(
+      commitOnce(indexDir) { (batch, committed, batchId) =>
+        val index =
+          if (committed.nonEmpty) batch.sparkSession.read.parquet(committed: _*)
+          else Dedup.minhashIndex(batch.limit(0)) // empty frame, right schema
+        Dedup.incrementalMinhashPairs(batch, index)
+          .write.mode("overwrite").parquet(batchDir(pairsDir, batchId))
+        Dedup.minhashIndex(batch)
+      })
 
   /** The duplicated-SPAN removal loop as a streaming query — the
     * [[incrementalDedupLoop]] protocol applied to [[graft.operators.Dedup
@@ -315,44 +355,18 @@ object StreamingOps {
     */
   def incrementalSpanDedupLoop(spark: SparkSession, docsStreamDir: String,
       indexDir: String, cleanDir: String, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import org.apache.hadoop.fs.Path
-    val docsSchema = graft.sources.Jsonl.documentsSchema
-    val reader = spark.readStream.schema(docsSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docsStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.Dedup
-        val s = batch.sparkSession
-        val idxRoot = new Path(indexDir)
-        val fs = idxRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val idxBatch = new Path(idxRoot, s"batch_id=$batchId")
-        if (!fs.exists(new Path(idxBatch, "_SUCCESS"))) {
-          val committed =
-            if (fs.exists(idxRoot))
-              fs.listStatus(idxRoot)
-                .filter(st => st.isDirectory &&
-                  fs.exists(new Path(st.getPath, "_SUCCESS")))
-                .map(_.getPath.toString).toSeq
-            else Seq.empty[String]
-          val stored =
-            if (committed.nonEmpty)
-              s.read.parquet(committed: _*)
-                .groupBy(col("gh")).agg(min(col("owner")).as("owner"))
-            else Dedup.spanGramIndex(batch.limit(0))
-          Dedup.dedupSpansIncremental(stored, batch)
-            .write.mode("overwrite")
-            .parquet(new Path(cleanDir, s"batch_id=$batchId").toString)
-          // written LAST: its _SUCCESS marks the whole batch committed
-          Dedup.spanGramIndex(batch).write.mode("overwrite").parquet(idxBatch.toString)
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    drain(spark, Jsonl.documentsSchema, docsStreamDir, checkpoint, maxFilesPerTrigger)(
+      commitOnce(indexDir) { (batch, committed, batchId) =>
+        val stored =
+          if (committed.nonEmpty)
+            batch.sparkSession.read.parquet(committed: _*)
+              .groupBy(col("gh")).agg(min(col("owner")).as("owner"))
+          else Dedup.spanGramIndex(batch.limit(0))
+        Dedup.dedupSpansIncremental(stored, batch)
+          .write.mode("overwrite").parquet(batchDir(cleanDir, batchId))
+        Dedup.spanGramIndex(batch)
+      })
 
   /** The image-dedup loop as a streaming query — [[incrementalDedupLoop]]'s
     * recipe applied to the perceptual-hash path: each micro-batch of
@@ -369,42 +383,17 @@ object StreamingOps {
   def incrementalMediaDedupLoop(spark: SparkSession, mediaStreamDir: String,
       indexDir: String, pairsDir: String, checkpoint: String,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
     val mediaSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("payload", BinaryType)))
-    val reader = spark.readStream.schema(mediaSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(mediaStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.multimodal.Multimodal
-        val s = batch.sparkSession
-        val idxRoot = new Path(indexDir)
-        val fs = idxRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val idxBatch = new Path(idxRoot, s"batch_id=$batchId")
-        if (!fs.exists(new Path(idxBatch, "_SUCCESS"))) {
-          val committed =
-            if (fs.exists(idxRoot))
-              fs.listStatus(idxRoot)
-                .filter(st => st.isDirectory &&
-                  fs.exists(new Path(st.getPath, "_SUCCESS")))
-                .map(_.getPath.toString).toSeq
-            else Seq.empty[String]
-          val index =
-            if (committed.nonEmpty) s.read.parquet(committed: _*)
-            else Multimodal.dhashOf(batch.limit(0).toDF()) // empty, right schema
-          Multimodal.incrementalMediaPairs(batch.toDF(), index)
-            .write.mode("overwrite")
-            .parquet(new Path(pairsDir, s"batch_id=$batchId").toString)
-          // written LAST: its _SUCCESS is what marks the whole batch committed
-          Multimodal.dhashOf(batch.toDF()).write.mode("overwrite").parquet(idxBatch.toString)
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drain(spark, mediaSchema, mediaStreamDir, checkpoint, maxFilesPerTrigger)(
+      commitOnce(indexDir) { (batch, committed, batchId) =>
+        val index =
+          if (committed.nonEmpty) batch.sparkSession.read.parquet(committed: _*)
+          else Multimodal.dhashOf(batch.limit(0)) // empty, right schema
+        Multimodal.incrementalMediaPairs(batch, index)
+          .write.mode("overwrite").parquet(batchDir(pairsDir, batchId))
+        Multimodal.dhashOf(batch)
+      })
   }
 
   /** The BM25 index's incremental maintenance as a streaming query: each
@@ -419,22 +408,12 @@ object StreamingOps {
     */
   def incrementalSearchIndex(spark: SparkSession, docsStreamDir: String,
       indexDir: String, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import org.apache.hadoop.fs.Path
-    val reader = spark.readStream.schema(graft.sources.Jsonl.documentsSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docsStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.Search
-        val s = batch.sparkSession
-        val root = new Path(indexDir)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val bdir = new Path(root, s"batch_id=$batchId")
-        if (!fs.exists(new Path(bdir, "stats/_SUCCESS"))) {
-          val idx = Search.buildIndex(batch)
-          val postings = idx.postings.persist()
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    drain(spark, Jsonl.documentsSchema, docsStreamDir, checkpoint, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        val bdir = batchDir(indexDir, batchId)
+        if (!committed(batch.sparkSession, new Path(bdir), "stats/_SUCCESS")) {
+          val postings = Search.buildIndex(batch).postings.persist()
           postings.write.mode("overwrite").parquet(new Path(bdir, "postings").toString)
           Search.termDf(postings).write.mode("overwrite")
             .parquet(new Path(bdir, "df").toString)
@@ -442,13 +421,8 @@ object StreamingOps {
           Search.corpusStats(postings).write.mode("overwrite")
             .parquet(new Path(bdir, "stats").toString)
           postings.unpersist()
-          ()
         }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** The queryable index over every COMMITTED streamed bundle: postings
     * union (doc-disjoint), df re-added at term grain, stats re-summed —
@@ -456,15 +430,10 @@ object StreamingOps {
     * so the streamed index must equal a one-shot batch build bit-for-bit
     * (spec-pinned).
     */
-  def storedStreamIndex(spark: SparkSession, indexDir: String): graft.operators.Search.Bm25Index = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = fs.listStatus(root)
-      .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, "stats/_SUCCESS")))
-      .map(_.getPath.toString).toSeq
+  def storedStreamIndex(spark: SparkSession, indexDir: String): Search.Bm25Index = {
+    val committed = committedDirs(spark, indexDir, "stats/_SUCCESS")
     require(committed.nonEmpty, s"no committed index bundles under $indexDir")
-    graft.operators.Search.Bm25Index(
+    Search.Bm25Index(
       spark.read.parquet(committed.map(_ + "/postings"): _*),
       spark.read.parquet(committed.map(_ + "/df"): _*)
         .groupBy(col("token")).agg(sum(col("df")).as("df")),
@@ -484,23 +453,12 @@ object StreamingOps {
     */
   def incrementalSketchStore(spark: SparkSession, eventsStreamDir: String,
       staticEvents: DataFrame, sketchDir: String, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(eventsSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(eventsStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val days = batch.select(to_date(col("ts")).as("d"))
-          .distinct().collect().map(_.getDate(0)).toSeq
-        if (days.nonEmpty)
-          graft.sources.SketchStore.upsertDaily(
-            staticEvents.filter(to_date(col("ts")).isin(days: _*)), sketchDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    drain(spark, eventsSchema, eventsStreamDir, checkpoint, maxFilesPerTrigger) { (batch, _) =>
+      val days = daysOf(batch, "ts")
+      if (days.nonEmpty)
+        SketchStore.upsertDaily(staticEvents.filter(to_date(col("ts")).isin(days: _*)), sketchDir)
+    }
 
   /** [[incrementalSketchStore]]'s argument applied to the quantile store:
     * the days present in each micro-batch of arriving event files drive a
@@ -512,23 +470,12 @@ object StreamingOps {
     */
   def incrementalHistStore(spark: SparkSession, eventsStreamDir: String,
       staticEvents: DataFrame, histDir: String, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(eventsSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(eventsStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val days = batch.select(to_date(col("ts")).as("d"))
-          .distinct().collect().map(_.getDate(0)).toSeq
-        if (days.nonEmpty)
-          graft.sources.HistStore.upsertDaily(
-            staticEvents.filter(to_date(col("ts")).isin(days: _*)), histDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    drain(spark, eventsSchema, eventsStreamDir, checkpoint, maxFilesPerTrigger) { (batch, _) =>
+      val days = daysOf(batch, "ts")
+      if (days.nonEmpty)
+        HistStore.upsertDaily(staticEvents.filter(to_date(col("ts")).isin(days: _*)), histDir)
+    }
 
   /** The reference's incremental-recompute loop as a streaming query
     * (SURVEY.md §2.2.5): each micro-batch of newly-arrived order files drives
@@ -540,25 +487,14 @@ object StreamingOps {
   def incrementalDailyKpis(spark: SparkSession, ordersStreamDir: String,
       staticOrders: DataFrame, staticItems: DataFrame,
       kpiPath: String, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(graft.sources.Csv.ordersSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(ordersStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // D1 on the micro-batch only: the arrived files' dates drive recompute.
-        val dates = batch.select(to_date(col("created_at")).as("d"))
-          .distinct().collect().map(_.getDate(0)).toSeq
-        if (dates.nonEmpty) {
-          val daily = graft.operators.Kpi.orderKpis(staticOrders, staticItems, Some(dates))
-          graft.sinks.KeyValueSink.upsertPartitioned(daily, kpiPath, "date_key")
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    drain(spark, Csv.ordersSchema, ordersStreamDir, checkpoint, maxFilesPerTrigger) { (batch, _) =>
+      // D1 on the micro-batch only: the arrived files' dates drive recompute.
+      val dates = daysOf(batch, "created_at")
+      if (dates.nonEmpty)
+        KeyValueSink.upsertPartitioned(
+          Kpi.orderKpis(staticOrders, staticItems, Some(dates)), kpiPath, "date_key")
+    }
 
   /** URL-level ingest dedup as a streaming query: each micro-batch of
     * arriving documents is canonicalized ONCE, assigned its running dup
@@ -576,74 +512,20 @@ object StreamingOps {
     */
   def incrementalUrlDedupLoop(spark: SparkSession, docsStreamDir: String,
       indexDir: String, assignDir: String, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import org.apache.hadoop.fs.Path
-    val reader = spark.readStream.schema(graft.sources.Jsonl.documentsSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docsStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.TextOps
-        val s = batch.sparkSession
-        val idxRoot = new Path(indexDir)
-        val fs = idxRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val idxBatch = new Path(idxRoot, s"batch_id=$batchId")
-        if (!fs.exists(new Path(idxBatch, "_SUCCESS"))) {
-          val committed =
-            if (fs.exists(idxRoot))
-              fs.listStatus(idxRoot)
-                .filter(st => st.isDirectory &&
-                  fs.exists(new Path(st.getPath, "_SUCCESS")))
-                .map(_.getPath.toString).toSeq
-            else Seq.empty[String]
-          val index =
-            if (committed.nonEmpty)
-              s.read.parquet(committed: _*).groupBy(col("ch"))
-                .agg(sum(col("n_dups")).as("n_dups"),
-                  min(col("owner_doc")).as("owner_doc"))
-            else TextOps.urlIndex(batch.limit(0).toDF()) // empty, right schema
-          TextOps.incrementalUrlDedup(batch.toDF(), index)
-            .write.mode("overwrite")
-            .parquet(new Path(assignDir, s"batch_id=$batchId").toString)
-          // written LAST: its _SUCCESS is what marks the whole batch committed
-          TextOps.urlIndex(batch.toDF()).write.mode("overwrite")
-            .parquet(idxBatch.toString)
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    drain(spark, Jsonl.documentsSchema, docsStreamDir, checkpoint, maxFilesPerTrigger)(
+      commitOnce(indexDir) { (batch, committed, batchId) =>
+        val index =
+          if (committed.nonEmpty)
+            batch.sparkSession.read.parquet(committed: _*).groupBy(col("ch"))
+              .agg(sum(col("n_dups")).as("n_dups"),
+                min(col("owner_doc")).as("owner_doc"))
+          else TextOps.urlIndex(batch.limit(0)) // empty, right schema
+        TextOps.incrementalUrlDedup(batch, index)
+          .write.mode("overwrite").parquet(batchDir(assignDir, batchId))
+        TextOps.urlIndex(batch)
+      })
 
-  /** The training-manifest loop as a streaming query — the flagship
-    * curation artifact maintained CONTINUOUSLY: each micro-batch of
-    * arriving documents gets its manifest rows (canonicity, cluster,
-    * survivorship, langid, quality, split, model gate, keep) decided
-    * against the state of everything that arrived before it, at per-batch
-    * cost ([[graft.operators.TextOps.trainingManifestIncrementalWithDeltas]]
-    * applied under the [[incrementalDedupLoop]] exactly-once protocol).
-    *
-    * All four state stores under `storeDir` are APPEND-ONLY batchId-keyed
-    * subdir tables — no compaction, tombstone, or latest-wins resolution is
-    * needed for correctness, because every stale row is harmless by a
-    * monotonicity argument (documented on the deltas function): stale star
-    * edges only re-add implied connectivity (min-id labels stay exact under
-    * plain union), stale survivor bests are dominated by the merge-time
-    * row, digest owners min-merge at read (min is associative), and the
-    * signature index is immutable per doc. Reads per batch: label/survivor/
-    * owner unions are narrow doc-/cluster-/digest-grain tables; the corpus
-    * text is never re-read — each document is tokenized, hashed, and scored
-    * exactly once, in the batch where it arrives.
-    *
-    * Decisions are as-of ARRIVAL (the documented production semantic):
-    * a document's keep flag never flips retroactively when later arrivals
-    * duplicate it — history owns. Exactly-once despite foreachBatch's
-    * at-least-once replay: all five writes land in batchId subdirs, the
-    * signature index is written LAST, and its `_SUCCESS` is the commit
-    * marker — a replayed committed batch is a no-op, a torn first attempt
-    * is healed by overwriting the same subdirs.
-    */
   /** Seal-fenced committed-state listing for the manifest-loop store.
     *
     * A batch subdir `batch_id=<n>` is committed when its SIGINDEX twin
@@ -660,7 +542,6 @@ object StreamingOps {
     */
   private[graft] def committedManifestDirs(spark: SparkSession,
       storeDir: String, sub: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val sigRoot = new Path(s"$storeDir/sigindex")
     val fs = sigRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = new Path(s"$storeDir/$sub")
@@ -712,7 +593,6 @@ object StreamingOps {
     * state loss (ADVICE r12).
     */
   def compactManifestState(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     // the single commit-horizon snapshot: sigindex FIRST and ONCE
     val sigDirs = committedManifestDirs(spark, storeDir, "sigindex")
     val liveIds = sigDirs.map(new Path(_).getName.stripPrefix("batch_id=")).toSet
@@ -755,7 +635,6 @@ object StreamingOps {
     * deleted dirs were fenced duplicates of the seal).
     */
   def gcManifestState(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // only dirs the max COMMITTED seal provably fenced out are garbage; a
     // numeric dir additionally needs its own sigindex _SUCCESS marker — a
@@ -795,24 +674,41 @@ object StreamingOps {
     }
   }
 
+  /** The training-manifest loop as a streaming query — the flagship
+    * curation artifact maintained CONTINUOUSLY: each micro-batch of
+    * arriving documents gets its manifest rows (canonicity, cluster,
+    * survivorship, langid, quality, split, model gate, keep) decided
+    * against the state of everything that arrived before it, at per-batch
+    * cost ([[graft.operators.TextOps.trainingManifestIncrementalWithDeltas]]
+    * applied under the [[incrementalDedupLoop]] exactly-once protocol).
+    *
+    * All four state stores under `storeDir` are APPEND-ONLY batchId-keyed
+    * subdir tables — no compaction, tombstone, or latest-wins resolution is
+    * needed for correctness, because every stale row is harmless by a
+    * monotonicity argument (documented on the deltas function): stale star
+    * edges only re-add implied connectivity (min-id labels stay exact under
+    * plain union), stale survivor bests are dominated by the merge-time
+    * row, digest owners min-merge at read (min is associative), and the
+    * signature index is immutable per doc. Reads per batch: label/survivor/
+    * owner unions are narrow doc-/cluster-/digest-grain tables; the corpus
+    * text is never re-read — each document is tokenized, hashed, and scored
+    * exactly once, in the batch where it arrives.
+    *
+    * Decisions are as-of ARRIVAL (the documented production semantic):
+    * a document's keep flag never flips retroactively when later arrivals
+    * duplicate it — history owns. Exactly-once despite foreachBatch's
+    * at-least-once replay: all five writes land in batchId subdirs, the
+    * signature index is written LAST, and its `_SUCCESS` is the commit
+    * marker — a replayed committed batch is a no-op, a torn first attempt
+    * is healed by overwriting the same subdirs.
+    */
   def incrementalManifestLoop(spark: SparkSession, docsStreamDir: String,
       storeDir: String, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import org.apache.hadoop.fs.Path
-    import graft.operators.Dedup
-    val reader = spark.readStream.schema(graft.sources.Jsonl.documentsSchema)
-    val arrivals = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docsStreamDir)
-    arrivals.writeStream
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.operators.TextOps
-        val s = b.sparkSession
-        val batch = b.toDF()
-        val sigRoot = new Path(s"$storeDir/sigindex")
-        val fs = sigRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val sigBatch = new Path(sigRoot, s"batch_id=$batchId")
-        if (!fs.exists(new Path(sigBatch, "_SUCCESS"))) {
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    drain(spark, Jsonl.documentsSchema, docsStreamDir, checkpoint, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        val s = batch.sparkSession
+        if (!committed(s, new Path(batchDir(s"$storeDir/sigindex", batchId)))) {
           // commit is keyed by the sigindex marker, and compaction seals
           // fence their folded batches out — see committedManifestDirs.
           // The per-family listings below may STRADDLE a concurrent seal
@@ -821,10 +717,8 @@ object StreamingOps {
           // fences — either resolution reads the same state content
           // (labels/survivors/sigindex union is duplicate-tolerant,
           // owners min-folds to the same rows)
-          def committed(sub: String): Seq[String] =
-            committedManifestDirs(s, storeDir, sub)
           def union(sub: String, empty: => DataFrame): DataFrame = {
-            val dirs = committed(sub)
+            val dirs = committedManifestDirs(s, storeDir, sub)
             if (dirs.nonEmpty) s.read.parquet(dirs: _*) else empty
           }
           val labels = union("labels",
@@ -843,20 +737,14 @@ object StreamingOps {
             TextOps.trainingManifestIncrementalWithDeltas(
               batch, labels, survivors, owners, sig)
           def out(sub: String, df: DataFrame): Unit =
-            df.write.mode("overwrite")
-              .parquet(new Path(s"$storeDir/$sub", s"batch_id=$batchId").toString)
+            df.write.mode("overwrite").parquet(batchDir(s"$storeDir/$sub", batchId))
           out("manifest", rows)
           out("labels", labelDelta)
           out("survivors", survivorDelta)
           out("owners", Dedup.exactGroups(batch)
             .select(col("text_key"), col("canonical_id")))
           // written LAST: its _SUCCESS is what marks the whole batch committed
-          Dedup.minhashIndex(batch).write.mode("overwrite")
-            .parquet(sigBatch.toString)
+          out("sigindex", Dedup.minhashIndex(batch))
         }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 }

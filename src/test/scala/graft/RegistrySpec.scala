@@ -34,6 +34,28 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).schema.fieldNames.contains("daily_revenue"))
   }
 
+  test("csv_roundtrip_orders: a fixture rewritten in place is exported again") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.functions.col
+    import graft.sources.Tables
+    val d = Files.createTempDirectory("graft-csvfixture")
+    Files.list(Paths.get(TestSession.sf)).forEach(f => Files.copy(f, d.resolve(f.getFileName)))
+    val op = SparkEntry.queries("csv_roundtrip_orders")
+    def same(got: org.apache.spark.sql.DataFrame): Boolean = {
+      val want = Tables.ordersDomain(spark, d.toString)
+        .select(got.schema.map(f => col(f.name).cast(f.dataType)): _*)
+      got.count() == want.count() && got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty
+    }
+    assert(same(op(spark, d.toString)))
+    // rewrite orders.parquet with a subset of its rows
+    val subset = Files.createTempDirectory("graft-csvfixture-subset")
+    Tables.orders(spark, d.toString).filter(col("o_orderkey") % 2 === 0)
+      .coalesce(1).write.mode("overwrite").parquet(subset.toString)
+    val part = Files.list(subset).filter(_.toString.endsWith(".parquet")).findFirst().get()
+    Files.copy(part, d.resolve("orders.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    assert(same(op(spark, d.toString)), "stale CSV export served for a rewritten fixture")
+  }
+
   test("every registered op carries a DuckDB oracle") {
     // an op checked only by its row count is a deliberate act that must
     // change this pin

@@ -131,6 +131,46 @@ class StreamingSpec extends AnyFunSuite {
     assert(replayedPairs == batch)
   }
 
+  test("streaming incremental dedup heals a torn micro-batch against the committed batches only") {
+    import graft.operators.Dedup
+    val docs = Tables.documents(spark, TestSession.sf)
+    val inDir = Files.createTempDirectory("graft-torn-in").toString
+    val base = Files.createTempDirectory("graft-torn-out").toString
+    // two one-file waves: exactly two micro-batches, 0 and 1
+    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(inDir)
+    docs.filter(col("doc_id") % 2 === 1).coalesce(1).write.mode("append").parquet(inDir)
+    def run(): Unit = StreamingOps.incrementalDedupLoop(spark, inDir,
+      s"$base/index", s"$base/pairs",
+      Files.createTempDirectory("graft-torn-ckpt").toString, maxFilesPerTrigger = Some(1))
+      .awaitTermination(180000)
+    def pairsOf(dir: String): Seq[(Long, Long)] = spark.read.parquet(dir)
+      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSeq.sorted
+    def files(dir: String): Map[String, Long] =
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .map(f => f.getName -> f.lastModified).toMap
+    run()
+    assert(new java.io.File(s"$base/index").list().filter(_.startsWith("batch_id=")).sorted
+      .toSeq == Seq("batch_id=0", "batch_id=1"))
+    val batch1Pairs = pairsOf(s"$base/pairs/batch_id=1")
+    val batch0 = Seq("index", "pairs").map(t => files(s"$base/$t/batch_id=0"))
+    // tear batch 1: its pairs and index files stay on disk, its commit
+    // marker does not — the state a crash just before the marker leaves
+    Files.delete(java.nio.file.Paths.get(s"$base/index/batch_id=1/_SUCCESS"))
+    Files.deleteIfExists(java.nio.file.Paths.get(s"$base/index/batch_id=1/._SUCCESS.crc"))
+    run() // a fresh checkpoint replays both batches
+    assert(Seq("index", "pairs").map(t => files(s"$base/$t/batch_id=0")) == batch0,
+      "committed batch 0 must be a no-op")
+    assert(new java.io.File(s"$base/index/batch_id=1/_SUCCESS").exists())
+    // recomputed against batch 0's index only: the torn batch's own index
+    // would match every doc to itself
+    assert(pairsOf(s"$base/pairs/batch_id=1") == batch1Pairs)
+    val indexed = spark.read.parquet(s"$base/index")
+    assert(indexed.select("doc_id").distinct().count() == indexed.count())
+    val batch = Dedup.minhashPairs(docs)
+      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
+    assert(batch.nonEmpty && pairsOf(s"$base/pairs").toSet == batch)
+  }
+
   test("streaming media dedup over a growing hash index reproduces the doc-grain pair set") {
     import graft.multimodal.Multimodal
     val media = Multimodal.mediaFromDocuments(Tables.documents(spark, TestSession.sf))
