@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Benchmark main: times every registered query at the given SF, one JSON
   * line to stdout (driver contract). An untimed warm-up query absorbs
@@ -47,15 +47,18 @@ object Bench {
     * memory + disk bytes spilled during the query (0 on a healthy run);
     * `residentMb` = RDD storage still resident after the inter-query
     * release (the retained memos — growth across the suite means blocks
-    * are escaping the release).
+    * are escaping the release); `jobs` = Spark jobs the query started,
+    * schema-resolution jobs included.
     */
   final case class QRec(name: String, wall: Double, ok: Boolean,
-      cpuMs: Long, gcMs: Long, spillMb: Long, residentMb: Long)
+      cpuMs: Long, gcMs: Long, spillMb: Long, residentMb: Long, jobs: Long)
 
-  /** Sums executor CPU (ns) and GC (ms) across finished tasks; Bench reads
-    * deltas between queries (after a listener-bus flush) to attribute them.
+  /** Sums executor CPU (ns) and GC (ms) across finished tasks, and counts
+    * started jobs; Bench reads deltas between queries (after a listener-bus
+    * flush) to attribute them.
     */
   final class ResourceListener extends SparkListener {
+    val jobs = new AtomicLong(0L)
     val cpuNs = new AtomicLong(0L)
     val gcMs = new AtomicLong(0L)
     // execution-memory spill (r11): a query whose cpu inflates while gc
@@ -63,6 +66,7 @@ object Bench {
     // artifact distinguishes "more data" from "less memory" (the sf1
     // growth-table adjudication needed exactly this split)
     val spillBytes = new AtomicLong(0L)
+    override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
       val m = taskEnd.taskMetrics
       if (m != null) {
@@ -174,8 +178,8 @@ object Bench {
           nameFilters.isEmpty || nameFilters.exists(name.contains) }
         .map { case (name, fn) =>
         ListenerBridge.flush(spark.sparkContext)
-        val (cpu0, gc0, sp0) =
-          (listener.cpuNs.get(), listener.gcMs.get(), listener.spillBytes.get())
+        val (cpu0, gc0, sp0, jobs0) = (listener.cpuNs.get(), listener.gcMs.get(),
+          listener.spillBytes.get(), listener.jobs.get())
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
@@ -187,6 +191,7 @@ object Bench {
         val cpuMs = (listener.cpuNs.get() - cpu0) / 1000000L
         val gcMs = listener.gcMs.get() - gc0
         val spillMb = (listener.spillBytes.get() - sp0) / 1000000L
+        val jobs = listener.jobs.get() - jobs0
         // drop op-internal persists AND finished queries' checkpoint blocks
         // (clearCache alone leaves localCheckpoint RDDs resident — the r8
         // sf10 OOM; Release keeps the deliberately shared memo frames)
@@ -202,7 +207,7 @@ object Bench {
           try spark.sparkContext.getRDDStorageInfo
             .map(i => i.memSize + i.diskSize).sum / 1000000L
           catch { case scala.util.control.NonFatal(_) => -1L }
-        QRec(name, if (ok) elapsed else -1.0, ok, cpuMs, gcMs, spillMb, residentMb)
+        QRec(name, if (ok) elapsed else -1.0, ok, cpuMs, gcMs, spillMb, residentMb, jobs)
       }
     // Recording validity (round-3 lesson: BENCH_r03 recorded a GC-thrashed
     // run as 1302.8 s — gc 760 s = 58% of wall — where an idle re-run
@@ -294,7 +299,7 @@ object Bench {
       val use = if (okRuns.nonEmpty) okRuns else runs
       QRec(q, if (okRuns.nonEmpty) medD(okRuns.map(_.wall)) else -1.0,
         okRuns.nonEmpty, medL(use.map(_.cpuMs)), medL(use.map(_.gcMs)),
-        medL(use.map(_.spillMb)), medL(use.map(_.residentMb)))
+        medL(use.map(_.spillMb)), medL(use.map(_.residentMb)), medL(use.map(_.jobs)))
     }
     loadMax = allAttempts.map(_.load).max
     val invalidFlag = validAttempts.isEmpty
@@ -344,6 +349,7 @@ object Bench {
     val gc = obj(_.gcMs.toString)
     val spill = obj(_.spillMb.toString)
     val resident = obj(_.residentMb.toString)
+    val jobs = obj(_.jobs.toString)
     val failed = results.filterNot(_.ok).map(r => Json.quote(r.name)).mkString("[", ",", "]")
     val total = results.filter(_.ok).map(_.wall).sum
     val warmup = warmupError.map(e => s""","warmup_error":${Json.quote(e)}""").getOrElse("")
@@ -376,7 +382,7 @@ object Bench {
       .mkString("{", ",", "}")
     val diffJson = schemaDiff.map(Json.quote).mkString("[", ",", "]")
     val preflight = s""","schemas":$schemasJson,"schema_diff":$diffJson"""
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_ms":$cpu,"gc_ms":$gc,"spill_mb":$spill,"resident_mb":$resident,"failed":$failed$warmup$health,"warmup_attribution":$warmupAttribution$preflight,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_ms":$cpu,"gc_ms":$gc,"spill_mb":$spill,"resident_mb":$resident,"jobs":$jobs,"failed":$failed$warmup$health,"warmup_attribution":$warmupAttribution$preflight,"sf":"$sfDir"}"""
     println(detail)
     // Full-fidelity sidecar (r11 verdict #1): the committed BENCH_r{N}.json
     // is a 2000-char tail capture, so every cross-round diff it fed was

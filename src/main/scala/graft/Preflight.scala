@@ -59,7 +59,7 @@ object Preflight {
   def loadedSchemas(spark: SparkSession, dir: String): Seq[(String, String)] =
     expected.map { case (name, _) =>
       val rendered =
-        try spark.read.parquet(s"$dir/$name.parquet").schema
+        try sources.Tables.table(spark, dir, name).schema
           .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
         catch { case e: Throwable =>
           s"<unreadable: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(80)}>"
@@ -82,7 +82,7 @@ object Preflight {
   def schemaDiff(spark: SparkSession, dir: String): Seq[String] =
     expected.flatMap { case (name, cols) =>
       val loaded =
-        try Some(spark.read.parquet(s"$dir/$name.parquet").schema
+        try Some(sources.Tables.table(spark, dir, name).schema
           .map(f => f.name -> f.dataType.simpleString))
         catch { case e: Throwable => None }
       loaded match {

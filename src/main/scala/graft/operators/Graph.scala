@@ -132,105 +132,143 @@ object Graph {
     * Symmetric edges mean no dangling nodes (every node in the graph has
     * out-degree ≥ 1); nodes are exactly the edge endpoints.
     *
-    * Scale shape: state is one row per node and BROADCASTS into the edge
-    * join, so the persisted edge table never re-shuffles or re-sorts — each
-    * round is one map-side join over edges plus one node-grain aggregate.
-    * That holds while ranks ≪ edges (any dense co-purchase graph; catalog
-    * nodes vs catalog-pairs edges). Past [[stateBroadcastMaxNodes]] the op
-    * switches itself to the bucketed shape — edges pre-partitioned by
-    * `src` once, only the rank frame shuffles per round; the recurrence is
-    * unchanged. `n` is a driver long (single count of the node frame).
+    * Scale shape: up to [[stateBroadcastMaxNodes]] the rank state lives on
+    * the driver ([[driverRanks]]): each round is one broadcast join into the
+    * persisted edges plus one aggregate, collected. Past the ceiling the op
+    * switches itself to the bucketed shape — edges pre-partitioned by `src`
+    * once, only the rank frame shuffles per round; the recurrence is
+    * unchanged.
     */
-  def pageRank(edges: DataFrame, iters: Int = prIters): DataFrame = {
-    val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val nodes = outw.select(col("src").as("node")).persist()
-    val n = nodes.count()
-    val e = loopEdges(edges.join(outw, "src"), edges, n).persist()
-    val base = (prGrid * (prDampDen - prDampNum) / prDampDen) / n
-    var ranks = nodes.select(col("node"), lit(prGrid / n).as("p"))
-    // Round-0 state materialization (r9 LoopProf find): above the broadcast
-    // ceiling, rounds 2+ read their state from a checkpointed LogicalRDD
-    // while round 1 re-derived the seed projection through the persisted
-    // node frame and paid the first adaptive state exchange on top — a ~2×
-    // super-linear round-1 residual at sf10. Checkpointing the sized seed
-    // BEFORE the loop gives round 1 exactly the shape rounds 2+ have; the
-    // one-time cost moves into setup where the edge repartition already
-    // lives. Below the ceiling the state broadcasts and the seed exchange
-    // would be pure overhead, so small-fixture plans are unchanged.
-    val seedCheckpointed = n > stateBroadcastMaxNodes
-    if (seedCheckpointed)
-      ranks = ranks.repartition(graft.Scale.partitionsFor(nodes), col("node"))
-        .localCheckpoint()
-    // profiling only: materialize the persisted edge table as "round 0" so
-    // the per-round records measure the loop body alone, not the one-time
-    // repartition+persist that round 1 would otherwise absorb
-    if (graft.LoopProf.enabled) graft.LoopProf.timed("pagerank", 0)(e.count())
-    (1 to iters).foreach { i =>
-      graft.LoopProf.timed("pagerank", i) {
-        val contrib = e.join(stateHint(ranks, n), e("src") === ranks("node"))
-          .select(col("dst"), expr("(p * w) div ow").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        val prev = ranks
-        ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-          .select(col("node"),
-            (lit(base) +
-              expr(s"($prDampNum * coalesce(s, CAST(0 AS BIGINT))) div $prDampDen"))
-              .as("p"))
-          .localCheckpoint()
-        // bounded in-flight state: the eager checkpoint above no longer
-        // reads prev, so round i-1's blocks release NOW, not at the end of
-        // the query — at scale, iters × node-grain block accumulation is
-        // storage pressure the loop never needs (round 1's prev is the seed
-        // frame: only the loop's own round-0 checkpoint is its to drop)
-        if (i > 1 || seedCheckpointed) graft.Release.releaseCheckpoint(prev)
-      }
-    }
-    e.unpersist(); nodes.unpersist()
-    ranks.select(col("node").as("product_id"), col("p").as("rank_q"))
-  }
+  def pageRank(edges: DataFrame, iters: Int = prIters): DataFrame =
+    // every node a seed: the personalized recurrence IS the global one
+    ranks(edges, lit(true), iters, "pagerank")
 
   /** Personalized PageRank: identical recurrence to [[pageRank]] except the
     * teleport mass returns ONLY to the seed set — `base(v) = ((2^40·3) div
     * 20) div |seeds|` for seeds, 0 otherwise, and `p0` spreads the full grid
     * over the seeds. Rank then measures proximity to the seeds through
     * weighted co-purchase structure: the "products related to this basket"
-    * recommendation primitive. Same integer-grid determinism and broadcast
-    * shape as the global walk.
+    * recommendation primitive. Same integer-grid determinism and scale
+    * shapes as the global walk.
     */
   def personalizedPageRank(edges: DataFrame, seedPred: Column,
-      iters: Int = prIters): DataFrame = {
-    val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val nodes = outw.select(col("src").as("node")).persist()
-    val n = nodes.count()
-    val e = loopEdges(edges.join(outw, "src"), edges, n).persist()
-    val nSeeds = nodes.filter(seedPred).count()
-    require(nSeeds > 0, "personalized PageRank needs at least one seed in the graph")
-    val base = (prGrid * (prDampDen - prDampNum) / prDampDen) / nSeeds
-    val baseCol = when(seedPred, lit(base)).otherwise(lit(0L))
-    var ranks = nodes.select(col("node"),
-      when(seedPred, lit(prGrid / nSeeds)).otherwise(lit(0L)).as("p"))
-    // round-0 state materialization above the broadcast ceiling (see pageRank)
-    val seedCheckpointed = n > stateBroadcastMaxNodes
-    if (seedCheckpointed)
-      ranks = ranks.repartition(graft.Scale.partitionsFor(nodes), col("node"))
-        .localCheckpoint()
+      iters: Int = prIters): DataFrame =
+    ranks(edges, seedPred, iters, "pagerank_personalized").filter(col("rank_q") > 0)
+
+  /** The shared PageRank recurrence over the (node, ow, seed) frame: rank
+    * state on the driver while `onDriver(n)` ([[driverRanks]]), the
+    * bucketed shape otherwise ([[bucketedRanks]]). The node frame is
+    * collected with a limit one past the ceiling, so a sub-ceiling graph
+    * pays one aggregate for both its node count and its driver state.
+    * Output: (product_id, rank_q) for every node.
+    */
+  private[graft] def ranks(edges: DataFrame, seedPred: Column, iters: Int, loop: String,
+      onDriver: Long => Boolean = _ <= stateBroadcastMaxNodes): DataFrame = {
+    val nodes = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
+      .select(col("src").as("node"), col("ow"), coalesce(seedPred, lit(false)).as("seed"))
+    val local = nodes.limit(stateBroadcastMaxNodes.toInt + 1).collect()
+    if (onDriver(local.length)) return driverRanks(edges, local, nodes.schema("node"), iters, loop)
+    val persisted = nodes.persist()
+    val r = bucketedRanks(edges, persisted, persisted.count(), iters, loop)
+    persisted.unpersist()
+    r
+  }
+
+  /** Past [[stateBroadcastMaxNodes]]: edges pre-partitioned by `src` once
+    * ([[loopEdges]]), the rank frame checkpointed per round, and only the
+    * node-grain state shuffles into the per-round edge join.
+    */
+  private def bucketedRanks(edges: DataFrame, nodes: DataFrame, n: Long, iters: Int,
+      loop: String): DataFrame = {
+    val e = loopEdges(edges.join(nodes.select(col("node").as("src"), col("ow")), "src"),
+      edges, n).persist()
+    val nSeeds = nodes.filter(col("seed")).count()
+    val baseCol = when(col("seed"), lit(pprBase(nSeeds))).otherwise(lit(0L))
+    // Round-0 state materialization (r9 LoopProf find): rounds 2+ read
+    // their state from a checkpointed LogicalRDD while round 1 re-derived
+    // the seed projection through the persisted node frame and paid the
+    // first adaptive state exchange on top — a ~2× super-linear round-1
+    // residual at sf10. Checkpointing the sized seed BEFORE the loop gives
+    // round 1 exactly the shape rounds 2+ have; the one-time cost moves into
+    // setup where the edge repartition already lives.
+    var state = nodes.select(col("node"),
+      when(col("seed"), lit(prGrid / nSeeds)).otherwise(lit(0L)).as("p"))
+      .repartition(graft.Scale.partitionsFor(nodes), col("node"))
+      .localCheckpoint()
+    // profiling only: materialize the persisted edge table as "round 0" so
+    // the per-round records measure the loop body alone, not the one-time
+    // repartition+persist that round 1 would otherwise absorb
+    if (graft.LoopProf.enabled) graft.LoopProf.timed(loop, 0)(e.count())
     (1 to iters).foreach { i =>
-      val contrib = e.join(stateHint(ranks, n), e("src") === ranks("node"))
-        .select(col("dst"), expr("(p * w) div ow").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val prev = ranks
-      ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (baseCol +
-            expr(s"($prDampNum * coalesce(s, CAST(0 AS BIGINT))) div $prDampDen"))
-            .as("p"))
-        .localCheckpoint()
-      // bounded in-flight state (see pageRank)
-      if (i > 1 || seedCheckpointed) graft.Release.releaseCheckpoint(prev)
+      graft.LoopProf.timed(loop, i) {
+        val contrib = e.join(stateHint(state, n), e("src") === state("node"))
+          .select(col("dst"), expr("(p * w) div ow").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+        val prev = state
+        state = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+          .select(col("node"),
+            (baseCol +
+              expr(s"($prDampNum * coalesce(s, CAST(0 AS BIGINT))) div $prDampDen"))
+              .as("p"))
+          .localCheckpoint()
+        // bounded in-flight state: the eager checkpoint above no longer
+        // reads prev, so round i-1's blocks release NOW, not at the end of
+        // the query — at scale, iters × node-grain block accumulation is
+        // storage pressure the loop never needs
+        graft.Release.releaseCheckpoint(prev)
+      }
     }
-    e.unpersist(); nodes.unpersist()
-    ranks.filter(col("p") > 0)
-      .select(col("node").as("product_id"), col("p").as("rank_q"))
+    e.unpersist()
+    state.select(col("node").as("product_id"), col("p").as("rank_q"))
+  }
+
+  /** Teleport share of each seed in [[personalizedPageRank]]. */
+  private def pprBase(nSeeds: Long): Long = {
+    require(nSeeds > 0, "personalized PageRank needs at least one seed in the graph")
+    (prGrid * (prDampDen - prDampNum) / prDampDen) / nSeeds
+  }
+
+  /** The PageRank recurrence below [[stateBroadcastMaxNodes]], with the
+    * rank state on the driver. `rows` are the collected (node, ow, seed).
+    * Each round broadcasts the nonzero (node, p, ow) state into one join
+    * against the persisted edges, aggregates `Σ (p · w) div ow` per `dst`
+    * and collects it; `p' = base(v) + (17 · Σ) div 20` is then applied on
+    * the driver in exact `Long` arithmetic. This is [[bucketedRanks]]'
+    * recurrence bit for bit (every quantity is a non-negative long, where
+    * `/` and `div` agree; a zero-rank node contributes 0 either way),
+    * without the per-round checkpoint and node-grain join.
+    */
+  private def driverRanks(edges: DataFrame, rows: Array[org.apache.spark.sql.Row],
+      nodeField: StructField, iters: Int, loop: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    val spark = edges.sparkSession
+    val ids = rows.map(_.get(0))
+    val ow = rows.map(_.getLong(1))
+    val seed = rows.map(_.getBoolean(2))
+    val nSeeds = seed.count(identity).toLong
+    val base = pprBase(nSeeds)
+    val teleport = seed.map(if (_) base else 0L)
+    var p = seed.map(if (_) prGrid / nSeeds else 0L)
+    val index = ids.zipWithIndex.toMap
+    val stateSchema = StructType(Seq(nodeField,
+      StructField("p", LongType, nullable = false), StructField("ow", LongType, nullable = false)))
+    val e = edges.select(col("src"), col("dst"), col("w")).persist()
+    (1 to iters).foreach { i =>
+      graft.LoopProf.timed(loop, i) {
+        val live = ids.indices.filter(p(_) > 0).map(j => Row(ids(j), p(j), ow(j)))
+        val state = spark.createDataFrame(java.util.Arrays.asList(live: _*), stateSchema)
+        val s = new Array[Long](ids.length)
+        e.join(broadcast(state), e("src") === state("node"))
+          .groupBy(col("dst")).agg(sum(expr("(p * w) div ow")).as("s"))
+          .collect()
+          .foreach(r => index.get(r.get(0)).foreach(j => s(j) = r.getLong(1)))
+        p = Array.tabulate(ids.length)(j => teleport(j) + prDampNum * s(j) / prDampDen)
+      }
+    }
+    e.unpersist()
+    val out = ids.indices.map(j => Row(ids(j), p(j)))
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      nodeField.copy(name = "product_id"), StructField("rank_q", LongType, nullable = false))))
   }
 
   /** Fixed iteration count for SALSA (unrolled in the oracle). */
@@ -979,7 +1017,7 @@ object Graph {
 
   /** The stored edge table (building it on first use). */
   def storedEdges(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureEdges(spark, srcDir)}/edges")
+    graft.sources.ArtifactStore.readParquet(spark, s"${ensureEdges(spark, srcDir)}/edges")
 
   /** Baked into the bipartite-store dir name. */
   val BipartiteStoreVersion = "v1"
@@ -1009,9 +1047,10 @@ object Graph {
   def salsaStored(spark: SparkSession, srcDir: String,
       iters: Int = salsaIters): DataFrame = {
     val dir = ensureBipartite(spark, srcDir)
-    val base = spark.read.parquet(s"$dir/edges").persist()
-    val du = spark.read.parquet(s"$dir/udeg").persist()
-    val dp = spark.read.parquet(s"$dir/pdeg").persist()
+    def read(t: String) = graft.sources.ArtifactStore.readParquet(spark, s"$dir/$t")
+    val base = read("edges").persist()
+    val du = read("udeg").persist()
+    val dp = read("pdeg").persist()
     val r = salsaLoop(base, du, dp, du.count(), dp.count(), iters)
     du.unpersist(); dp.unpersist(); base.unpersist()
     r
@@ -1034,7 +1073,7 @@ object Graph {
 
   /** The stored community labels (building them on first use). */
   def storedCommunities(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureCommunities(spark, srcDir)}/labels")
+    graft.sources.ArtifactStore.readParquet(spark, s"${ensureCommunities(spark, srcDir)}/labels")
 
   // --------------------------------------------------------------------------
   // Registered ops + DuckDB oracles

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Op
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** Full-text retrieval over the documents corpus: a BM25-family ranked
   * search through an inverted index, expressed as plain joins/aggregates so
@@ -454,7 +454,7 @@ object Search {
     * mechanics with the edge/tokenizer/vector stores).
     */
   def ensureIndex(spark: SparkSession, srcDir: String): String =
-    graft.sources.ArtifactStore.ensure(srcDir, "searchstore", IndexStoreVersion) { dir =>
+    ArtifactStore.ensure(srcDir, "searchstore", IndexStoreVersion) { dir =>
       // ONE tokenization pass: the positional layer lands first, and the
       // (doc, token) postings aggregate off the cached occurrences, so the
       // corpus text is split exactly once per store build.
@@ -475,14 +475,14 @@ object Search {
   def storedIndex(spark: SparkSession, srcDir: String): Bm25Index = {
     val dir = ensureIndex(spark, srcDir)
     Bm25Index(
-      spark.read.parquet(s"$dir/postings"),
-      spark.read.parquet(s"$dir/df"),
-      spark.read.parquet(s"$dir/stats"))
+      ArtifactStore.readParquet(spark, s"$dir/postings"),
+      ArtifactStore.readParquet(spark, s"$dir/df"),
+      ArtifactStore.readParquet(spark, s"$dir/stats"))
   }
 
   /** The stored positional layer (building the bundle on first use). */
   def storedPositions(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureIndex(spark, srcDir)}/positions")
+    ArtifactStore.readParquet(spark, s"${ensureIndex(spark, srcDir)}/positions")
 
   // --------------------------------------------------------------------------
   // Registered ops + DuckDB oracles

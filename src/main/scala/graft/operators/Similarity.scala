@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Op
 import graft.functions.{GraftExpressions, Scored, TopKAggregator}
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (north-star extension; SURVEY.md §7.3 step 8).
@@ -1215,7 +1215,7 @@ object Similarity {
     * the oracles re-derive everything from the raw embeddings table.
     */
   def ensureCodes(spark: SparkSession, srcDir: String): String =
-    graft.sources.ArtifactStore.ensure(srcDir, "vecstore", VectorStoreVersion) { dir =>
+    ArtifactStore.ensure(srcDir, "vecstore", VectorStoreVersion) { dir =>
       indexFrame(Tables.embeddings(spark, srcDir))
         .write.mode("overwrite").parquet(s"$dir/index")
     }
@@ -1224,7 +1224,7 @@ object Similarity {
     * first use).
     */
   def storedIndex(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureCodes(spark, srcDir)}/index")
+    ArtifactStore.readParquet(spark, s"${ensureCodes(spark, srcDir)}/index")
 
   /** Oracle twin of the registered `sim_index_append` split: stored corpus
     * = seeds ∪ (vec_id % [[appendMod]] ≠ 0), batch = the rest.

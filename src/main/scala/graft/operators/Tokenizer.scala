@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Op
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** BPE tokenizer training (Sennrich et al., "Neural Machine Translation of
   * Rare Words with Subword Units") as a distributed Spark computation — the
@@ -163,7 +163,7 @@ object Tokenizer {
     * state) — a content-stamped [[graft.sources.ArtifactStore]] dir.
     */
   def ensureTrained(spark: SparkSession, srcDir: String): String =
-    graft.sources.ArtifactStore.ensure(srcDir, "bpestore", TokenizerStoreVersion) { dir =>
+    ArtifactStore.ensure(srcDir, "bpestore", TokenizerStoreVersion) { dir =>
       val (merges, syms) = bpeTrainState(Tables.documents(spark, srcDir), bpeMerges)
       merges.write.mode("overwrite").parquet(s"$dir/merges")
       syms.write.mode("overwrite").parquet(s"$dir/syms")
@@ -171,11 +171,11 @@ object Tokenizer {
 
   /** Stored merge table (training on first use). */
   def storedMerges(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureTrained(spark, srcDir)}/merges")
+    ArtifactStore.readParquet(spark, s"${ensureTrained(spark, srcDir)}/merges")
 
   /** Stored final word→symbols state (training on first use). */
   def storedSyms(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureTrained(spark, srcDir)}/syms")
+    ArtifactStore.readParquet(spark, s"${ensureTrained(spark, srcDir)}/syms")
 
   /** [[bpeVocab]] over a prebuilt symbol state. */
   def bpeVocabFromSyms(syms: DataFrame): DataFrame =

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Content-stamped build-once artifact directories — the shared mechanics
   * behind every derived-index store (the fixture fact store, the graph edge
   * store, the search index, the trained tokenizer, the vector codes store)
@@ -30,17 +32,24 @@ object ArtifactStore {
     * [[graft.Session]]'s AQE initial-partition sizing shares this walker for
     * exactly that reason).
     */
-  private def parquetFiles(srcDir: String): Seq[(String, java.io.File)] = {
-    def walk(rel: String, f: java.io.File): Seq[(String, java.io.File)] =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten
-          .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
-          .flatMap(c => walk(s"$rel/${c.getName}", c))
-      else Seq((rel, f))
+  private def parquetFiles(srcDir: String): Seq[(String, java.io.File)] =
     Option(new java.io.File(srcDir).listFiles()).toSeq.flatten
       .filter(_.getName.endsWith(".parquet"))
       .flatMap(e => walk(e.getName, e))
-  }
+
+  /** The data files under `f` (`f` itself when it is a file), each keyed
+    * by `rel` followed by its path below `f`.
+    */
+  private def walk(rel: String, f: java.io.File): Seq[(String, java.io.File)] =
+    if (f.isDirectory)
+      Option(f.listFiles()).toSeq.flatten
+        .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+        .flatMap(c => walk(s"$rel/${c.getName}", c))
+    else Seq((rel, f))
+
+  private def stamp(files: Seq[(String, java.io.File)]): String =
+    files.map { case (rel, f) => s"$rel:${f.lastModified}:${f.length}" }
+      .sorted.mkString(",")
 
   /** Total data bytes of the fixture dir's parquet entries (flat files or
     * Spark-style directories) — the one fixture-size estimate shared by the
@@ -49,10 +58,39 @@ object ArtifactStore {
   def parquetBytes(srcDir: String): Long = parquetFiles(srcDir).map(_._2.length).sum
 
   /** The content stamp of a fixture dir's parquet files. */
-  def stampOf(srcDir: String): String =
-    parquetFiles(srcDir)
-      .map { case (rel, f) => s"$rel:${f.lastModified}:${f.length}" }
-      .sorted.mkString(",")
+  def stampOf(srcDir: String): String = stamp(parquetFiles(srcDir))
+
+  /** Settings that change the schema Spark resolves from parquet footers.
+    * [[Tables.events]] flips `nanosAsLong` at run time.
+    */
+  private val parquetSchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** (path, schema settings) → (content stamp, resolved schema). */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[String]), (String, org.apache.spark.sql.types.StructType)]()
+
+  /** `spark.read.parquet(path)` for a local fixture table or store dir, with
+    * the schema resolved once per (path, recursive content stamp, parquet
+    * schema settings). Spark resolves a parquet schema by running a
+    * footer-reading job while the DataFrame is built; every later build of
+    * an unchanged path reads with the memoized schema and starts no job. A
+    * file rewritten in place changes the stamp and is resolved again.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (path, parquetSchemaConfs.map(spark.conf.getOption(_).getOrElse("")))
+    val st = stamp(walk("", new java.io.File(path)))
+    val schema = Option(schemas.get(key)).filter(_._1 == st).map(_._2).getOrElse {
+      val resolved = spark.read.parquet(path).schema
+      schemas.put(key, (st, resolved))
+      resolved
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Resolve (and build, exactly once per content stamp) the artifact dir
     * for `srcDir`. `build` writes the artifact's files under the dir it is

@@ -59,14 +59,14 @@ object CurationStore {
     }
 
   def labels(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureFixture(spark, srcDir)}/labels")
+    ArtifactStore.readParquet(spark, s"${ensureFixture(spark, srcDir)}/labels")
 
   def survivors(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureFixture(spark, srcDir)}/survivors")
+    ArtifactStore.readParquet(spark, s"${ensureFixture(spark, srcDir)}/survivors")
 
   def owners(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureFixture(spark, srcDir)}/owners")
+    ArtifactStore.readParquet(spark, s"${ensureFixture(spark, srcDir)}/owners")
 
   def sigIndex(spark: SparkSession, srcDir: String): DataFrame =
-    spark.read.parquet(s"${ensureFixture(spark, srcDir)}/sigindex")
+    ArtifactStore.readParquet(spark, s"${ensureFixture(spark, srcDir)}/sigindex")
 }

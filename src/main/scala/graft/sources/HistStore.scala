@@ -83,7 +83,7 @@ object HistStore {
       .parquet(dir)
 
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    ArtifactStore.readParquet(spark, dir)
 
   /** Range quantiles over [from, to] (inclusive) straight from the stored
     * day histograms: partition-pruned day scan, counter-sum merge, then the

@@ -81,7 +81,7 @@ object SketchStore {
       .parquet(dir)
 
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    ArtifactStore.readParquet(spark, dir)
 
   /** Per-day approximate uniques straight from the stored sketches (each
     * row estimated at ITS OWN k).

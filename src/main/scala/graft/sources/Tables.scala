@@ -20,8 +20,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A fixture table, its schema resolved once per content stamp
+    * ([[ArtifactStore.readParquet]]).
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ArtifactStore.readParquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

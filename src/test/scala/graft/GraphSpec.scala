@@ -97,6 +97,31 @@ class GraphSpec extends AnyFunSuite {
     assert(key(Graph.pageRank(star.repartition(7))) == key(Graph.pageRank(star)))
   }
 
+  test("driver-state pagerank equals the bucketed shape bit for bit (global and personalized)") {
+    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getAs[Long]("product_id") -> r.getAs[Long]("rank_q")).toMap
+    val stored = Graph.storedEdges(spark, TestSession.sf)
+    for ((edges, seed) <- Seq((star, col("node") === 1L), (stored, col("node") < 5))) {
+      val driver = key(Graph.pageRank(edges))
+      assert(driver.size > 1)
+      assert(driver == key(Graph.ranks(edges, lit(true), Graph.prIters, "t", onDriver = _ => false)))
+      val seeded = key(Graph.personalizedPageRank(edges, seed))
+      assert(seeded.nonEmpty)
+      assert(seeded == key(Graph.ranks(edges, seed, Graph.prIters, "t", onDriver = _ => false)
+        .filter(col("rank_q") > 0)))
+    }
+  }
+
+  test("sub-ceiling pagerank over the stored edges runs in a pinned number of Spark jobs") {
+    val edges = Graph.storedEdges(spark, TestSession.sf)
+    edges.schema // the store build and its schema resolution are not the loop's
+    val jobs = JobCount(spark)(Graph.pageRank(edges).write.format("noop").mode("overwrite").save())
+    // node collect 2, edge persist 1, 3 rounds × (state broadcast, map
+    // stage, collect) 9, output 1; a per-round node join + localCheckpoint
+    // took 21
+    assert(jobs <= 13, s"pagerank started $jobs Spark jobs")
+  }
+
   test("copurchase edges are symmetric with equal weights, never self-loops") {
     val e = Graph.copurchaseEdges(graft.sources.Tables.orderItems(spark, TestSession.sf))
     assert(e.filter(col("src") === col("dst")).isEmpty)
