@@ -11,8 +11,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * warm rep that still compiles is evicting from the codegen cache) and a
   * per-stage table — wall, executor cpu, records, shuffle bytes, callsite —
   * so "where does the cpu go" is answered from the artifact instead of
-  * guessed from the plan. Not part of the driver contract; never registered
-  * as a query.
+  * guessed from the plan. With more than one query it then repeats each
+  * query alone (its codegen classes stay cached between its own reps) and
+  * prints, per query, the median in-pass wall next to the median alone
+  * wall: the difference is what the pass's codegen-cache thrash costs it.
+  * Not part of the driver contract; never registered as a query.
   *
   *   sbt "runMain graft.Prof <sfDir> <query>[,<query>...] [reps]"
   */
@@ -62,17 +65,24 @@ object Prof {
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.addSparkListener(jobs)
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    /** (wall ms, classes compiled) of one materialisation of query `i`. */
+    def timed(i: Int): (Double, Long) = {
+      val cg0 = compiles.getCount
+      val t0 = System.nanoTime()
+      materialise(i)
+      ((System.nanoTime() - t0) / 1e6, compiles.getCount - cg0)
+    }
+    val inPass = qNames.indices.map(_ => new ArrayBuffer[(Double, Long)]())
     for (r <- 1 to reps; (qName, i) <- qNames.zipWithIndex) {
       org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
       listener.stages.clear()
-      val (jobs0, cg0) = (jobs.jobs.get(), compiles.getCount)
-      val t0 = System.nanoTime()
-      materialise(i)
-      val wall = (System.nanoTime() - t0) / 1e6
+      val jobs0 = jobs.jobs.get()
+      val (wall, cg) = timed(i)
+      inPass(i) += ((wall, cg))
       org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
       val recs = listener.stages.synchronized(listener.stages.toVector)
       println(f"%n=== $qName rep $r: wall=${wall}%.0f ms, " +
-        f"jobs=${jobs.jobs.get() - jobs0}, compiles=${compiles.getCount - cg0}, " +
+        f"jobs=${jobs.jobs.get() - jobs0}, compiles=$cg, " +
         f"stages=${recs.size}, cpu=${recs.map(_.cpuMs).sum} ms, " +
         f"gc=${recs.map(_.gcMs).sum} ms ===")
       println(f"${"cpuMs"}%8s ${"wallMs"}%8s ${"tasks"}%5s ${"recsRead"}%10s " +
@@ -84,6 +94,22 @@ object Prof {
         if (s.scopes.nonEmpty) println(s"          scopes: ${s.scopes}")
       }
       Release.interQuery(spark)
+    }
+    if (qNames.size > 1) {
+      spark.sparkContext.removeSparkListener(listener)
+      def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+      println(f"%n${"thrash"}%-32s ${"inPassMs"}%9s ${"aloneMs"}%9s ${"costMs"}%9s " +
+        f"${"inPassCg"}%8s ${"aloneCg"}%8s")
+      qNames.zipWithIndex.foreach { case (qName, i) =>
+        // the first alone rep recompiles what the pass evicted: not counted
+        val alone = (0 to reps).map { _ =>
+          val t = timed(i); Release.interQuery(spark); t
+        }.tail
+        val (p, a) = (median(inPass(i).map(_._1).toSeq), median(alone.map(_._1)))
+        println(f"${"thrash " + qName}%-32s $p%9.0f $a%9.0f ${p - a}%9.0f " +
+          f"${median(inPass(i).map(_._2.toDouble).toSeq)}%8.0f " +
+          f"${median(alone.map(_._2.toDouble))}%8.0f")
+      }
     }
     spark.stop()
   }

@@ -64,11 +64,18 @@ object GraftExpressions {
       args => PqArgminCode(args(0), PqArgminCode.literalCodebook(args(1)))))
 
   /** Idempotent per-session registration; call before building plans that use
-    * the column wrappers below.
+    * the column wrappers below. A name already bound to its builder here (by
+    * an earlier call or by [[GraftSparkExtensions]]) is left alone: binding
+    * it again would replace an equal function and log a warning per name
+    * per call.
     */
-  def register(spark: SparkSession): Unit = builders.foreach { case (name, _, b) =>
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, b, "built-in")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, _, b) =>
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      if (!registry.lookupFunctionBuilder(id).contains(b))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
+    }
   }
 
   /** Intersection size of two SORTED long-array sets. */

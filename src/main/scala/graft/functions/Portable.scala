@@ -24,6 +24,16 @@ import org.apache.spark.sql.types._
   */
 object Portable {
 
+  /** Sum of doubles with a deterministic, order-independent result: each
+    * value is cast to DECIMAL(18,4), the decimals sum exactly in any order,
+    * and the total is cast back to double — bit-identical with [[dsumSql]]
+    * in DuckDB, where a plain `sum(double)` drifts in the last ULP.
+    */
+  def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
+
+  /** SQL twin of [[dsum]] (Spark SQL and DuckDB). */
+  def dsumSql(x: String): String = s"CAST(SUM(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"
+
   /** 60-bit portable hash of a string column. */
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast(LongType)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.Op
 import graft.functions.{Kmv, Portable}
+import graft.functions.Portable.{dsum, dsumSql}
 import graft.sources.Tables
 
 /** Analytics operators beyond the reference's inventory (it has no sorts,
@@ -15,10 +16,6 @@ import graft.sources.Tables
   * replaces exact countDistinct at 100 TB.
   */
 object Analytics {
-
-  private def dsum(c: org.apache.spark.sql.Column) =
-    sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
-  private def dsumSql(x: String) = s"CAST(SUM(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"
 
   /** Category revenue with ROLLUP subtotals: (category, date), per-category,
     * and grand total. Two-level: the fact table first reduces to (category,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Op
+import graft.functions.Portable.{dsum, dsumSql}
 import graft.sources.Tables
 
 /** Event-time operators over the `events` table (north-star extension;
@@ -18,10 +19,6 @@ import graft.sources.Tables
   * window functions) — the canonical distributed sessionize.
   */
 object EventOps {
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
-  private def dsumSql(x: String) = s"CAST(SUM(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"
 
   val sessionGapUs: Long = 30L * 60 * 1000 * 1000 // 30 min
 
@@ -991,7 +988,7 @@ object EventOps {
     val daily = events
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("day_value"))
+        dsum(col("value")).as("day_value"))
     val span = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val spine = daily.select(col("event_type")).distinct()
       .crossJoin(broadcast(span))
@@ -1038,7 +1035,7 @@ object EventOps {
          |daily AS (
          |  SELECT CAST(ts AS DATE) AS day, event_type,
          |         CAST(COUNT(*) AS BIGINT) AS n_events,
-         |         CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS day_value
+         |         ${dsumSql("value")} AS day_value
          |  FROM ev GROUP BY 1, 2),
          |span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily),
          |spine AS (

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -132,12 +132,11 @@ object Graph {
     * Symmetric edges mean no dangling nodes (every node in the graph has
     * out-degree ≥ 1); nodes are exactly the edge endpoints.
     *
-    * Scale shape: up to [[stateBroadcastMaxNodes]] the rank state lives on
-    * the driver ([[driverRanks]]): each round is one broadcast join into the
-    * persisted edges plus one aggregate, collected. Past the ceiling the op
-    * switches itself to the bucketed shape — edges pre-partitioned by `src`
-    * once, only the rank frame shuffles per round; the recurrence is
-    * unchanged.
+    * Scale shape: up to [[localMaxEdges]] edges the edge frame is
+    * collected once and every round runs on the driver ([[localRanks]]);
+    * past that the op switches itself to the bucketed shape
+    * ([[bucketedRanks]]) — edges pre-partitioned by `src` once, only the
+    * rank frame shuffles per round. The recurrence is the same in both.
     */
   def pageRank(edges: DataFrame, iters: Int = prIters): DataFrame =
     // every node a seed: the personalized recurrence IS the global one
@@ -155,28 +154,62 @@ object Graph {
       iters: Int = prIters): DataFrame =
     ranks(edges, seedPred, iters, "pagerank_personalized").filter(col("rank_q") > 0)
 
-  /** The shared PageRank recurrence over the (node, ow, seed) frame: rank
-    * state on the driver while `onDriver(n)` ([[driverRanks]]), the
-    * bucketed shape otherwise ([[bucketedRanks]]). The node frame is
-    * collected with a limit one past the ceiling, so a sub-ceiling graph
-    * pays one aggregate for both its node count and its driver state.
+  /** Edge ceiling of [[localRanks]]. Its driver arrays peak at about
+    * 60 bytes per edge (the per-partition arrays and their concatenation,
+    * plus two index arrays), so ≤ 256 MB here; sf0.1's 2.39M edges fit.
+    */
+  val localMaxEdges = 1L << 22
+
+  /** The shared PageRank recurrence. `seedPred` reads the `node` column.
+    * [[localRanks]] when `onDriver(edges)` (by default: integer columns and
+    * at most [[localMaxEdges]] rows by [[edgeRows]]), [[bucketedRanks]]
+    * otherwise; `onDriver` is a test hook that pins the shape.
     * Output: (product_id, rank_q) for every node.
     */
   private[graft] def ranks(edges: DataFrame, seedPred: Column, iters: Int, loop: String,
-      onDriver: Long => Boolean = _ <= stateBroadcastMaxNodes): DataFrame = {
+      onDriver: DataFrame => Boolean = fitsDriver): DataFrame = {
+    if (onDriver(edges)) return localRanks(edges, seedPred, iters, loop)
     val nodes = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
       .select(col("src").as("node"), col("ow"), coalesce(seedPred, lit(false)).as("seed"))
-    val local = nodes.limit(stateBroadcastMaxNodes.toInt + 1).collect()
-    if (onDriver(local.length)) return driverRanks(edges, local, nodes.schema("node"), iters, loop)
-    val persisted = nodes.persist()
-    val r = bucketedRanks(edges, persisted, persisted.count(), iters, loop)
-    persisted.unpersist()
+      .persist()
+    val r = bucketedRanks(edges, nodes, nodes.count(), iters, loop)
+    nodes.unpersist()
     r
   }
 
-  /** Past [[stateBroadcastMaxNodes]]: edges pre-partitioned by `src` once
-    * ([[loopEdges]]), the rank frame checkpointed per round, and only the
-    * node-grain state shuffles into the per-round edge join.
+  private def fitsDriver(edges: DataFrame): Boolean =
+    integerEdges(edges) && edgeRows(edges).exists(_ <= localMaxEdges)
+
+  /** An upper bound on the frame's row count that starts no Spark job, when
+    * one is known: the plan only projects, filters and repartitions one
+    * local relation (its row count) or one parquet scan (its files' footer
+    * row counts). None for any other plan.
+    */
+  private[graft] def edgeRows(df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val plan = df.queryExecution.optimizedPlan
+    val narrow = plan.find {
+      case _: Project | _: Filter | _: RepartitionOperation | _: LeafNode => false
+      case _ => true
+    }.isEmpty
+    if (!narrow) None
+    else plan.collectLeaves() match {
+      case Seq(l: LocalRelation) => Some(l.data.length.toLong)
+      case Seq(l: LogicalRelation) => l.relation match {
+        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          Some(graft.sources.ArtifactStore.parquetFileRows(df.sparkSession, fs.location.inputFiles.toSeq))
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** Past [[localMaxEdges]]: edges pre-partitioned by `src` once above
+    * [[stateBroadcastMaxNodes]] nodes ([[loopEdges]]), the rank frame
+    * checkpointed per round, and only the node-grain state shuffles into
+    * the per-round edge join.
     */
   private def bucketedRanks(edges: DataFrame, nodes: DataFrame, n: Long, iters: Int,
       loop: String): DataFrame = {
@@ -228,47 +261,83 @@ object Graph {
     (prGrid * (prDampDen - prDampNum) / prDampDen) / nSeeds
   }
 
-  /** The PageRank recurrence below [[stateBroadcastMaxNodes]], with the
-    * rank state on the driver. `rows` are the collected (node, ow, seed).
-    * Each round broadcasts the nonzero (node, p, ow) state into one join
-    * against the persisted edges, aggregates `Σ (p · w) div ow` per `dst`
-    * and collects it; `p' = base(v) + (17 · Σ) div 20` is then applied on
-    * the driver in exact `Long` arithmetic. This is [[bucketedRanks]]'
-    * recurrence bit for bit (every quantity is a non-negative long, where
-    * `/` and `div` agree; a zero-rank node contributes 0 either way),
-    * without the per-round checkpoint and node-grain join.
+  /** `src`, `dst` and `w` are all integers, so [[localRanks]] can hold them
+    * as `Long` arrays with the Spark shapes' arithmetic.
     */
-  private def driverRanks(edges: DataFrame, rows: Array[org.apache.spark.sql.Row],
-      nodeField: StructField, iters: Int, loop: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    val spark = edges.sparkSession
-    val ids = rows.map(_.get(0))
-    val ow = rows.map(_.getLong(1))
-    val seed = rows.map(_.getBoolean(2))
+  private def integerEdges(edges: DataFrame): Boolean =
+    Seq("src", "dst", "w").forall(c => edges.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+
+  /** The PageRank recurrence for at most [[localMaxEdges]] edges, wholly on
+    * the driver. `(node, dst, w, seed)` is collected once, each partition as
+    * primitive arrays; out-weights, seeds and node indices are derived on
+    * the driver, and each round is one loop over the edge arrays. The
+    * arithmetic is the Spark shapes' bit for bit (non-negative longs, where
+    * `/` and `div` agree), and `multiplyExact`/`addExact` make an overflow
+    * fail as ANSI Spark does. Contributions to a `dst` that is no `src`
+    * drop, as in the node join of [[bucketedRanks]]. Output: a local
+    * relation, so the op costs one Spark job for the collect and one for
+    * whatever consumes it.
+    */
+  private def localRanks(edges: DataFrame, seedPred: Column, iters: Int,
+      loop: String): DataFrame = {
+    val nodeType = edges.schema("src").dataType
+    val sel = edges.select(col("src").as("node"), col("dst"), col("w"))
+      .select(Seq("node", "dst", "w").map(col(_).cast(LongType)) :+
+        coalesce(seedPred, lit(false)).as("seed"): _*)
+    val parts = sel.queryExecution.toRdd.mapPartitions { rows =>
+      val (s, d, w) = (Array.newBuilder[Long], Array.newBuilder[Long], Array.newBuilder[Long])
+      val seed = Array.newBuilder[Boolean]
+      rows.foreach { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2),
+          "PageRank edges hold no null src, dst or w")
+        s += r.getLong(0); d += r.getLong(1); w += r.getLong(2); seed += r.getBoolean(3)
+      }
+      Iterator((s.result(), d.result(), w.result(), seed.result()))
+    }.collect()
+    val src = Array.concat(parts.map(_._1): _*)
+    val dst = Array.concat(parts.map(_._2): _*)
+    val w = Array.concat(parts.map(_._3): _*)
+    val edgeSeed = Array.concat(parts.map(_._4): _*)
+    val ids = {
+      val a = src.clone()
+      java.util.Arrays.sort(a)
+      var m = 0
+      a.indices.foreach(k => if (k == 0 || a(k) != a(m - 1)) { a(m) = a(k); m += 1 })
+      java.util.Arrays.copyOf(a, m)
+    }
+    val n = ids.length
+    val si = src.map(java.util.Arrays.binarySearch(ids, _))
+    val di = dst.map(java.util.Arrays.binarySearch(ids, _)) // < 0: not a node
+    val ow = new Array[Long](n)
+    val seed = new Array[Boolean](n)
+    src.indices.foreach { k =>
+      ow(si(k)) = Math.addExact(ow(si(k)), w(k))
+      seed(si(k)) = edgeSeed(k)
+    }
     val nSeeds = seed.count(identity).toLong
     val base = pprBase(nSeeds)
-    val teleport = seed.map(if (_) base else 0L)
     var p = seed.map(if (_) prGrid / nSeeds else 0L)
-    val index = ids.zipWithIndex.toMap
-    val stateSchema = StructType(Seq(nodeField,
-      StructField("p", LongType, nullable = false), StructField("ow", LongType, nullable = false)))
-    val e = edges.select(col("src"), col("dst"), col("w")).persist()
     (1 to iters).foreach { i =>
       graft.LoopProf.timed(loop, i) {
-        val live = ids.indices.filter(p(_) > 0).map(j => Row(ids(j), p(j), ow(j)))
-        val state = spark.createDataFrame(java.util.Arrays.asList(live: _*), stateSchema)
-        val s = new Array[Long](ids.length)
-        e.join(broadcast(state), e("src") === state("node"))
-          .groupBy(col("dst")).agg(sum(expr("(p * w) div ow")).as("s"))
-          .collect()
-          .foreach(r => index.get(r.get(0)).foreach(j => s(j) = r.getLong(1)))
-        p = Array.tabulate(ids.length)(j => teleport(j) + prDampNum * s(j) / prDampDen)
+        val s = new Array[Long](n)
+        var k = 0
+        while (k < src.length) {
+          val t = di(k)
+          if (t >= 0) s(t) = Math.addExact(s(t), Math.multiplyExact(p(si(k)), w(k)) / ow(si(k)))
+          k += 1
+        }
+        p = Array.tabulate(n)(j => Math.addExact(if (seed(j)) base else 0L,
+          Math.multiplyExact(prDampNum, s(j)) / prDampDen))
       }
     }
-    e.unpersist()
     val out = ids.indices.map(j => Row(ids(j), p(j)))
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
-      nodeField.copy(name = "product_id"), StructField("rank_q", LongType, nullable = false))))
+    edges.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      StructField("product_id", LongType, nullable = false),
+      StructField("rank_q", LongType, nullable = false))))
+      .select(col("product_id").cast(nodeType).as("product_id"), col("rank_q"))
   }
 
   /** Fixed iteration count for SALSA (unrolled in the oracle). */
@@ -1042,16 +1111,17 @@ object Graph {
     }
 
   /** [[salsa]] over the stored bipartite graph: node counts come from the
-    * degree parquet footers and the loop starts immediately.
+    * degree parquet footers (no Spark job) and the loop starts immediately.
     */
   def salsaStored(spark: SparkSession, srcDir: String,
       iters: Int = salsaIters): DataFrame = {
     val dir = ensureBipartite(spark, srcDir)
     def read(t: String) = graft.sources.ArtifactStore.readParquet(spark, s"$dir/$t")
+    def rows(t: String) = graft.sources.ArtifactStore.parquetRows(spark, s"$dir/$t")
     val base = read("edges").persist()
     val du = read("udeg").persist()
     val dp = read("pdeg").persist()
-    val r = salsaLoop(base, du, dp, du.count(), dp.count(), iters)
+    val r = salsaLoop(base, du, dp, rows("udeg"), rows("pdeg"), iters)
     du.unpersist(); dp.unpersist(); base.unpersist()
     r
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Op
+import graft.functions.Portable.{dsum, dsumSql}
 import graft.sources.{FactStore, Tables}
 
 /** The reference's analytics core: consolidated enrichment joins + the two KPI
@@ -33,13 +34,6 @@ import graft.sources.{FactStore, Tables}
   * implement the intended DailyKPIs semantics documented in its README.md:167-175.
   */
 object Kpi {
-
-  /** Sum of doubles with a deterministic, order-independent result. */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
-
-  private val dsumSql = (x: String) =>
-    s"CAST(SUM(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"
 
   /** Consolidated item-grain frame: order_items × products (category) ×
     * orders (order_date, user_id, order-level return), plus 0/1 return flags.

@@ -377,7 +377,7 @@ object Relational {
     */
   def topCategoriesByRevenue(consolidated: DataFrame, n: Int): DataFrame =
     consolidated.groupBy(col("category"))
-      .agg(sum(col("sale_price").cast(DecimalType(18, 4))).cast(DoubleType).as("revenue"))
+      .agg(dsum(col("sale_price")).as("revenue"))
       .orderBy(col("revenue").desc, col("category"))
       .limit(n)
 
@@ -945,7 +945,7 @@ object Relational {
          |consolidated AS (
          |  SELECT p.category, i.sale_price
          |  FROM order_items i LEFT JOIN products p ON i.product_id = p.id)
-         |SELECT category, CAST(SUM(CAST(sale_price AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+         |SELECT category, ${dsumSql("sale_price")} AS revenue
          |FROM consolidated GROUP BY category
          |ORDER BY revenue DESC, category LIMIT 5""".stripMargin) { (s, d) =>
       topCategoriesByRevenue(Kpi.consolidatedOf(s, d), 5)

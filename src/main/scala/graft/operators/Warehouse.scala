@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Op
+import graft.functions.Portable.{dsum, dsumSql}
 import graft.sources.Tables
 
 /** Dimensional-warehouse maintenance operators: SCD Type-2 history build,
@@ -22,10 +23,6 @@ import graft.sources.Tables
   * collects to the driver.
   */
 object Warehouse {
-
-  private def dsum(c: Column): Column =
-    sum(c.cast("decimal(18,4)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(SUM(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"
 
   // --------------------------------------------------------------------------
   // SCD Type-2

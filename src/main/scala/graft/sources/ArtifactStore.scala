@@ -92,6 +92,25 @@ object ArtifactStore {
     spark.read.schema(schema).parquet(path)
   }
 
+  /** Row count of a local parquet file or Spark-written parquet dir, summed
+    * from the files' footers on the driver: no Spark job, where a `count()`
+    * of the read costs one or more.
+    */
+  def parquetRows(spark: SparkSession, path: String): Long =
+    parquetFileRows(spark, walk("", new java.io.File(path)).map(_._2)
+      .filter(_.getName.endsWith(".parquet")).map(_.toURI.toString))
+
+  /** [[parquetRows]] over the given parquet file URIs. */
+  def parquetFileRows(spark: SparkSession, files: Seq[String]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
   /** Resolve (and build, exactly once per content stamp) the artifact dir
     * for `srcDir`. `build` writes the artifact's files under the dir it is
     * given; the `_GRAFT_STORE_OK` marker commits it (a crashed half-build

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.functions.Portable.dsum
 import graft.multimodal.Multimodal
 import graft.operators.{Dedup, Kpi, Search, TextOps}
 import graft.sinks.KeyValueSink
@@ -49,7 +50,7 @@ object StreamingOps {
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("total_value"))
+        dsum(col("value")).as("total_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("total_value"))
 
@@ -201,7 +202,7 @@ object StreamingOps {
       .withWatermark("ts", watermarkDelay)
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("total_value"))
+        dsum(col("value")).as("total_value"))
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("n_events"), col("total_value"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** Spark jobs started while `body` runs (listener-bus flushed on both sides). */
 object JobCount {
@@ -23,7 +23,8 @@ object JobCount {
 
 /** The parquet schema memo behind `ArtifactStore.readParquet`: a DataFrame
   * over an unchanged path builds without a Spark job, and the memo never
-  * serves a schema across a content change or a schema-setting change.
+  * serves a schema across a content change or a schema-setting change. The
+  * footer row counts of `ArtifactStore.parquetRows` are never stale either.
   */
 class ArtifactStoreSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -70,5 +71,20 @@ class ArtifactStoreSpec extends AnyFunSuite {
       spark.conf.set(k, "false")
       assert(JobCount(spark)(Tables.table(spark, d, "events")) == 0)
     } finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("footer row counts equal count(), start no job, and follow a rewrite") {
+    val d = fixtureCopy("rows")
+    val path = d.resolve("orders.parquet").toString
+    val want = spark.read.parquet(path).count()
+    var got = 0L
+    assert(JobCount(spark) { got = ArtifactStore.parquetRows(spark, path) } == 0)
+    assert(got == want)
+    val staged = Files.createTempDirectory("graft-rowcount-staged")
+    spark.read.parquet(path).limit(3).coalesce(1).write.mode("overwrite").parquet(staged.toString)
+    assert(ArtifactStore.parquetRows(spark, staged.toString) == 3L, "a Spark-written dir")
+    val part = Files.list(staged).filter(_.toString.endsWith(".parquet")).findFirst().get()
+    Files.copy(part, d.resolve("orders.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    assert(ArtifactStore.parquetRows(spark, path) == 3L, "stale row count served for a rewritten file")
   }
 }

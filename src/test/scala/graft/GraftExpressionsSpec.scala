@@ -23,6 +23,31 @@ class GraftExpressionsSpec extends AnyFunSuite {
   private val vecGen: Gen[Seq[Float]] =
     Gen.listOfN(16, Gen.chooseNum(-2.0f, 2.0f)).map(_.toSeq)
 
+  test("register binds each function once per session and rebinds a foreign one") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    val names = Seq("graft_sorted_intersect_count", "graft_qdot", "graft_intdot",
+      "graft_simhash32", "graft_minhash", "graft_sorted_run_stats", "graft_hilbert",
+      "graft_dhash64", "graft_pq_argmin")
+    def infos() = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    GraftExpressions.register(s)
+    val first = infos()
+    assert(first.forall(_.isDefined))
+    GraftExpressions.register(s)
+    // a re-registration stores a new ExpressionInfo (and logs a warning)
+    assert(infos().zip(first).forall { case (a, b) => a.get eq b.get },
+      "a second register call replaced a bound function")
+    // a name bound to some other function is bound to graft's again
+    registry.createOrReplaceTempFunction("graft_hilbert",
+      _ => org.apache.spark.sql.catalyst.expressions.Literal(0L), "scala_udf")
+    GraftExpressions.register(s)
+    // the curve is a bijection: two distinct cells never share a distance
+    val d = s.range(1).select(GraftExpressions.hilbert(lit(5L), lit(7L)),
+      GraftExpressions.hilbert(lit(7L), lit(5L))).head()
+    assert(d.getLong(0) != d.getLong(1), "a foreign graft_hilbert was left bound")
+  }
+
   test("SortedIntersectCount == size(array_intersect) on sorted long sets") {
     import spark.implicits._
     GraftExpressions.register(spark)

@@ -97,18 +97,26 @@ class GraphSpec extends AnyFunSuite {
     assert(key(Graph.pageRank(star.repartition(7))) == key(Graph.pageRank(star)))
   }
 
+  private def pinned(edges: org.apache.spark.sql.DataFrame, seed: org.apache.spark.sql.Column,
+      onDriver: Boolean) =
+    Graph.ranks(edges, seed, Graph.prIters, "t", onDriver = _ => onDriver)
+
   test("driver-state pagerank equals the bucketed shape bit for bit (global and personalized)") {
+    // both shapes: local (one edge collect, rounds on the driver) and the
+    // bucketed Spark loop
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("product_id") -> r.getAs[Long]("rank_q")).toMap
     val stored = Graph.storedEdges(spark, TestSession.sf)
     for ((edges, seed) <- Seq((star, col("node") === 1L), (stored, col("node") < 5))) {
-      val driver = key(Graph.pageRank(edges))
-      assert(driver.size > 1)
-      assert(driver == key(Graph.ranks(edges, lit(true), Graph.prIters, "t", onDriver = _ => false)))
+      val global = key(Graph.pageRank(edges))
+      assert(global.size > 1)
       val seeded = key(Graph.personalizedPageRank(edges, seed))
       assert(seeded.nonEmpty)
-      assert(seeded == key(Graph.ranks(edges, seed, Graph.prIters, "t", onDriver = _ => false)
-        .filter(col("rank_q") > 0)))
+      for (onDriver <- Seq(true, false)) {
+        assert(global == key(pinned(edges, lit(true), onDriver)), s"global walk, onDriver=$onDriver")
+        assert(seeded == key(pinned(edges, seed, onDriver).filter(col("rank_q") > 0)),
+          s"personalized walk, onDriver=$onDriver")
+      }
     }
   }
 
@@ -116,10 +124,44 @@ class GraphSpec extends AnyFunSuite {
     val edges = Graph.storedEdges(spark, TestSession.sf)
     edges.schema // the store build and its schema resolution are not the loop's
     val jobs = JobCount(spark)(Graph.pageRank(edges).write.format("noop").mode("overwrite").save())
-    // node collect 2, edge persist 1, 3 rounds × (state broadcast, map
-    // stage, collect) 9, output 1; a per-round node join + localCheckpoint
-    // took 21
-    assert(jobs <= 13, s"pagerank started $jobs Spark jobs")
+    // edges under the local ceiling: the edge collect 1, the output 1. The
+    // driver state with Spark rounds took 13, the per-round node join +
+    // localCheckpoint before it 21
+    assert(jobs <= 2, s"pagerank started $jobs Spark jobs")
+  }
+
+  test("pagerank: a p·w that overflows a long fails in both shapes, as ANSI Spark does") {
+    // two nodes, p = 2^39 each after seeding: p·w = 2^69 in round 1
+    val edges = Seq((1L, 2L, 1L << 30), (2L, 1L, 1L << 30)).toDF("src", "dst", "w")
+    def overflowed(t: Throwable): Boolean =
+      t.isInstanceOf[ArithmeticException] || (t.getCause != null && overflowed(t.getCause))
+    for (onDriver <- Seq(true, false)) {
+      val e = intercept[Exception](pinned(edges, lit(true), onDriver).collect())
+      assert(overflowed(e), s"onDriver=$onDriver: expected an arithmetic overflow, got $e")
+    }
+    // the default shape for these edges is the local one
+    assert(overflowed(intercept[Exception](Graph.pageRank(edges).collect())))
+  }
+
+  test("pagerank's local shape is chosen from a row bound that starts no Spark job") {
+    val stored = Graph.storedEdges(spark, TestSession.sf)
+    val n = stored.count()
+    var bound: Option[Long] = None
+    assert(JobCount(spark) { bound = Graph.edgeRows(stored) } == 0)
+    assert(bound.contains(n))
+    assert(Graph.edgeRows(star.filter(col("w") > 0).repartition(3)).contains(star.count()))
+    // a generator or a join can multiply rows: no bound, so the bucketed shape
+    assert(Graph.edgeRows(star.withColumn("k", explode(array(lit(1), lit(2))))).isEmpty)
+    assert(Graph.edgeRows(star.join(star.select(col("src").as("dst")), "dst")).isEmpty)
+  }
+
+  test("stored salsa sizes its loop from the degree footers in a pinned number of Spark jobs") {
+    def run() = Graph.salsaStored(spark, TestSession.sf).write.format("noop").mode("overwrite").save()
+    run() // the store build and its schema resolutions are not the loop's
+    val jobs = JobCount(spark)(run())
+    // the degree reads persist (their cache builds are 3 of these); counting
+    // them to size the loop as well took 32
+    assert(jobs <= 29, s"salsa started $jobs Spark jobs")
   }
 
   test("copurchase edges are symmetric with equal weights, never self-loops") {
