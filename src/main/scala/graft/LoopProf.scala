@@ -10,14 +10,10 @@ package graft
   *
   * Disabled (the default) it is a single volatile read per ROUND — nothing
   * per row, nothing in any query plan. Enable with env
-  * `SPARK_GRAFT_LOOPPROF=1`; rounds print one line each to stderr and
-  * accumulate in [[records]] for programmatic reads.
+  * `SPARK_GRAFT_LOOPPROF=1`; rounds print one line each to stderr.
   */
 object LoopProf {
   val enabled: Boolean = sys.env.get("SPARK_GRAFT_LOOPPROF").contains("1")
-
-  /** (op, round, wall ms, process CPU ms). */
-  val records = new scala.collection.mutable.ArrayBuffer[(String, Int, Long, Long)]()
 
   private def cpuMs(): Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
@@ -31,9 +27,7 @@ object LoopProf {
       val (w0, c0) = (System.nanoTime(), cpuMs())
       val r = body
       val (w1, c1) = (System.nanoTime(), cpuMs())
-      val rec = (op, round, (w1 - w0) / 1000000L, c1 - c0)
-      records.synchronized { records += rec }
-      System.err.println(s"[loopprof] ${rec._1} round=${rec._2} wall_ms=${rec._3} cpu_ms=${rec._4}")
+      System.err.println(s"[loopprof] $op round=$round wall_ms=${(w1 - w0) / 1000000L} cpu_ms=${c1 - c0}")
       r
     }
 }

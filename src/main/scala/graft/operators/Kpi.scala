@@ -228,19 +228,20 @@ object Kpi {
       .agg(count(col("order_id")).as("total_items_sold_daily"))
 
   /** DailyKPIs from the partitioned store: ONE file-pruned scan of
-    * `orders_enriched` + a date-grain join. The `isin` on the partition
-    * column becomes PartitionFilters (file-level pruning) — only the target
-    * dates' partitions are ever opened (PlanSpec locks this in).
+    * `orders_enriched` + a date-grain join. Each read names only the target
+    * dates' partition dirs, and the `isin` on the partition column becomes
+    * PartitionFilters (file-level pruning) — only the target dates'
+    * partitions are ever opened (PlanSpec locks this in).
     */
   def orderKpisFromStore(spark: SparkSession, storeDir: String,
       targetDates: Seq[Date]): DataFrame = {
-    val orders = FactStore.ordersEnriched(spark, storeDir)
+    val orders = FactStore.ordersEnriched(spark, storeDir, targetDates)
       .filter(col("order_date").isin(targetDates: _*))
     // pruning items_daily to the same dates is exact: the left join inside
     // dailyKpis keeps only the (already filtered) left side's date keys.
     // The store keeps one count layer per (date, batch); layers of one date
     // are disjoint item sets, so they SUM.
-    val ipd = FactStore.itemsDaily(spark, storeDir)
+    val ipd = FactStore.itemsDaily(spark, storeDir, targetDates)
       .filter(col("date_key").isin(targetDates: _*))
       .groupBy(col("date_key"))
       .agg(sum(col("total_items_sold_daily")).as("total_items_sold_daily"))
@@ -252,7 +253,7 @@ object Kpi {
     */
   def categoryKpisFromStore(spark: SparkSession, storeDir: String,
       targetDates: Seq[Date]): DataFrame =
-    categoryKpis(FactStore.consolidated(spark, storeDir), Some(targetDates))
+    categoryKpis(FactStore.consolidated(spark, storeDir, targetDates), Some(targetDates))
 
   /** Build-once materialization of the fixture domain into a partitioned
     * store (ingest-time work — the pipeline maintains this as batches land;

@@ -1,8 +1,11 @@
 package graft.sources
 
-import java.security.MessageDigest
+import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,7 +28,7 @@ import graft.ForkJoin
   * {{{
   *   consolidated/order_date=YYYY-MM-DD/    item-grain enriched fact (category KPIs)
   *   orders_enriched/order_date=YYYY-MM-DD/ order-grain fact + pre-agg'd order_revenue
-  *   items_daily/                           date-grain item counts (tiny, unpartitioned)
+  *   items_daily/date_key=YYYY-MM-DD/       date-grain item counts (tiny)
   * }}}
   *
   * `orders_enriched` bakes in the reference's A2 agg-back join (revenue per
@@ -42,9 +45,6 @@ object FactStore {
     * an old version tag are simply never read again.
     */
   val Version = "v1"
-
-  private def md5hex(s: String): String = MessageDigest.getInstance("MD5")
-    .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Write one batch of facts into `storeDir`, layered by
     * `(order_date, batch_id)` with dynamic partition overwrite:
@@ -78,7 +78,7 @@ object FactStore {
     // stash from a crashed earlier run is superseded by this rerun.
     clearStash(spark, storeDir, batchId)
     moveBatchLayers(spark, storeDir, stashDir(storeDir, batchId), batchId)
-    val tmpRoot = new org.apache.hadoop.fs.Path(s"$storeDir/.ingest_tmp/$batchId")
+    val tmpRoot = new Path(s"$storeDir/.ingest_tmp/$batchId")
     val fs = tmpRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(tmpRoot, true)
     val dates = try {
@@ -89,7 +89,7 @@ object FactStore {
       //    returns or throws, so the cleanup below never races a writer
       stageLayers(spark, tmpRoot.toString, batchId, consolidated, ordersEnriched, itemsDaily)
       // the staged delivery's date partitions, read off the directory names
-      val staged = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+      val staged = Option(fs.globStatus(new Path(
           s"$tmpRoot/orders_enriched/order_date=*/batch_id=$batchId"))).toSeq.flatten
         .map(_.getPath.getParent.getName.stripPrefix("order_date=")).sorted
       if (staged.nonEmpty) {
@@ -103,7 +103,6 @@ object FactStore {
         //    layer left half-promoted by a crashed earlier attempt is
         //    replaced (it belongs to this same batch by construction)
         moveBatchLayers(spark, tmpRoot.toString, storeDir, batchId, replace = true)
-        syncCatalog(spark, storeDir)
         clearStash(spark, storeDir, batchId) // accepted: old contribution gone
       }
       staged
@@ -112,7 +111,6 @@ object FactStore {
       // layers come out AND the batch's previous layers go back in
       eachBatchLayer(spark, storeDir, batchId)((fs, layer, _) => fs.delete(layer, true))
       restoreBatchLayers(spark, storeDir, batchId)
-      syncCatalog(spark, storeDir)
       throw e
     } finally {
       fs.delete(tmpRoot, true)
@@ -152,28 +150,19 @@ object FactStore {
     *
     * The batch's own previous layers are stashed away when this runs, so ANY
     * overlap between the staged orders and the store is another batch's.
-    * The store side reads exactly the delivery's date partition dirs (with
-    * `basePath`, so partition columns survive) — no full-store listing.
+    * The store side reads exactly the delivery's date partition dirs
+    * ([[read]]) — no full-store listing; a delivery whose dates hold no
+    * layer yet (the usual new day) starts no Spark job.
     */
   private def assertNoCrossBatchRedelivery(spark: SparkSession, storeDir: String,
       stagedRoot: String, batchId: String, dates: Seq[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val table = new org.apache.hadoop.fs.Path(s"$storeDir/orders_enriched")
-    val fs = table.getFileSystem(conf)
-    if (!fs.exists(table)) return
-    val existingDirs = dates.map(d => s"$storeDir/orders_enriched/order_date=$d")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-      .filter(p => fs.listStatus(new org.apache.hadoop.fs.Path(p)).nonEmpty)
-    if (existingDirs.isEmpty) return
-    val staged = spark.read
-      .option("basePath", s"$stagedRoot/orders_enriched")
-      .parquet(s"$stagedRoot/orders_enriched")
-      .select(col("order_id"))
-    val existing = spark.read
-      .option("basePath", s"$storeDir/orders_enriched")
-      .parquet(existingDirs: _*)
-      .select(col("order_id"), col("batch_id"))
-    val dup = existing.join(staged, "order_id").select(col("order_id")).distinct().take(5)
+    val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val holdsLayer = dates.map(d => new Path(s"$storeDir/orders_enriched/order_date=$d"))
+      .exists(p => fs.exists(p) && fs.listStatus(p).nonEmpty)
+    if (!holdsLayer) return
+    val staged = spark.read.parquet(s"$stagedRoot/orders_enriched").select(col("order_id"))
+    val existing = read(spark, storeDir, "orders_enriched", dates).select(col("order_id"))
+    val dup = existing.join(staged, "order_id").distinct().take(5)
     if (dup.nonEmpty)
       throw new IllegalStateException(
         s"batch $batchId re-delivers orders already stored by another batch " +
@@ -184,8 +173,8 @@ object FactStore {
   /** The batch id compaction seals history under; regular ingest may not use it. */
   val SealedId = "__sealed__"
 
-  /** All (table, partition-key) pairs of the store. */
-  private val tables = Seq("consolidated" -> "order_date",
+  /** Every table of the store and its partition key. */
+  private val tables = ListMap("consolidated" -> "order_date",
     "orders_enriched" -> "order_date", "items_daily" -> "date_key")
 
   /** Compact sealed history: merge every batch layer of partitions at or
@@ -212,38 +201,37 @@ object FactStore {
     *
     * Concurrency contract: SINGLE WRITER — one compactor (and no concurrent
     * [[upsertBatch]] touching at-or-before-horizon dates; the horizon IS the
-    * rerun retention window, so a compliant ingest never does). Readers stay
-    * correct through the whole staging phase — the catalog table is never
-    * dropped, and live partitions are untouched until the swap. The swap
-    * itself is two atomic renames per partition plus one catalog re-sync;
-    * a reader racing exactly that window can observe a partition mid-move —
-    * the boundary every non-transactional Hive-layout compactor has (a
-    * snapshotting table format is the upgrade path). [[compactPhaseHook]]
-    * pins the pre/post visibility in tests.
+    * rerun retention window, so a compliant ingest never does). Readers
+    * name and list their partition dirs when they build a frame ([[read]]),
+    * and live partitions are untouched until the swap, so a reader stays
+    * correct through the whole staging phase. The swap itself is two atomic
+    * renames per partition; a reader racing exactly that window can observe
+    * a partition mid-move, and a frame built before a swap lists files the
+    * swap moves away, so it must be rebuilt after it — the boundary every
+    * non-transactional Hive-layout compactor has (a snapshotting table
+    * format is the upgrade path). [[compactPhaseHook]] pins the pre/post
+    * visibility in tests.
     */
   def compact(spark: SparkSession, storeDir: String, horizon: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     tables.foreach { case (t, key) =>
-      val tablePath = new org.apache.hadoop.fs.Path(s"$storeDir/$t")
+      val tablePath = new Path(s"$storeDir/$t")
       val fs = tablePath.getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(s"$storeDir/.compact_tmp/$t")
-      val trashRoot = new org.apache.hadoop.fs.Path(s"$storeDir/.compact_trash/$t")
+      val tmp = new Path(s"$storeDir/.compact_tmp/$t")
+      val trashRoot = new Path(s"$storeDir/.compact_trash/$t")
       // 1. finish any swap a previous crashed run left behind (only the
       //    key= partition dirs — the staging write also leaves _SUCCESS /
-      //    _temporary debris that must not be renamed into the table); the
-      //    catalog then predates the recovered swaps — re-sync it before
-      //    reading
+      //    _temporary debris that must not be renamed into the table)
       if (fs.exists(tmp) || fs.exists(trashRoot)) {
         if (fs.exists(tmp))
           fs.listStatus(tmp).filter(_.getPath.getName.startsWith(s"$key="))
             .foreach { st =>
-              val dest = new org.apache.hadoop.fs.Path(tablePath, st.getPath.getName)
+              val dest = new Path(tablePath, st.getPath.getName)
               if (!fs.exists(dest)) renameOrDie(fs, st.getPath, dest)
               else fs.delete(st.getPath, true) // dest intact: stage was not swapped
             }
         fs.delete(tmp, true)
         fs.delete(trashRoot, true) // displaced pre-seal layers of completed swaps
-        syncCatalogTable(spark, storeDir, t)
       }
       // 2. partitions at/before the horizon still holding unsealed layers
       val dates = if (!fs.exists(tablePath)) Array.empty[String] else fs.listStatus(tablePath)
@@ -251,15 +239,14 @@ object FactStore {
         .map(_.stripPrefix(s"$key="))
         .filter(_ <= horizon) // ISO dates: lexicographic == chronological
         .filter { d =>
-          fs.listStatus(new org.apache.hadoop.fs.Path(tablePath, s"$key=$d"))
+          fs.listStatus(new Path(tablePath, s"$key=$d"))
             .exists(st => st.getPath.getName != s"batch_id=$SealedId")
         }
       if (dates.nonEmpty) {
         // 3. stage the merged layer: ALL rows of those partitions, one file
-        //    per partition, batch_id collapsed to __sealed__. Live tables and
-        //    catalog are untouched — readers see pre-seal state throughout.
-        val toSeal = readStore(spark, storeDir, t)
-          .filter(col(key).isin(dates.toSeq: _*))
+        //    per partition, batch_id collapsed to __sealed__. Live tables
+        //    are untouched — readers see pre-seal state throughout.
+        val toSeal = read(spark, storeDir, t, dates.toSeq)
           .withColumn("batch_id", lit(SealedId))
         toSeal.repartition(col(key))
           .write.mode(SaveMode.Overwrite).partitionBy(key, "batch_id")
@@ -272,17 +259,13 @@ object FactStore {
         //    nothing — sealing it is just trashing the empty dir.
         fs.mkdirs(trashRoot)
         dates.foreach { d =>
-          val live = new org.apache.hadoop.fs.Path(tablePath, s"$key=$d")
-          val staged = new org.apache.hadoop.fs.Path(tmp, s"$key=$d")
+          val live = new Path(tablePath, s"$key=$d")
+          val staged = new Path(tmp, s"$key=$d")
           if (fs.exists(live))
-            renameOrDie(fs, live, new org.apache.hadoop.fs.Path(trashRoot, s"$key=$d"))
+            renameOrDie(fs, live, new Path(trashRoot, s"$key=$d"))
           if (fs.exists(staged)) renameOrDie(fs, staged, live)
         }
         compactPhaseHook("swapped", t)
-        // 5. partitions were REPLACED, not just added: SYNC drops the stale
-        //    (date, batch) entries and registers the sealed ones — the table
-        //    itself stays continuously defined for concurrent readers
-        syncCatalogTable(spark, storeDir, t)
         fs.delete(trashRoot, true)
       }
       // per-TABLE cleanup only: the shared .compact_tmp root may still hold
@@ -294,8 +277,8 @@ object FactStore {
 
   /** Test seam for [[compact]]'s visibility contract: invoked as
     * `(phase, table)` at "staged" (merged data written aside, live table
-    * untouched) and "swapped" (partitions replaced, catalog about to
-    * re-sync). Production no-op.
+    * untouched) and "swapped" (partitions replaced, trash not yet deleted).
+    * Production no-op.
     */
   private[graft] var compactPhaseHook: (String, String) => Unit = (_, _) => ()
 
@@ -303,8 +286,7 @@ object FactStore {
     * an unchecked false after the source's counterpart was deleted is silent
     * data loss — fail loudly instead.
     */
-  private def renameOrDie(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
+  private def renameOrDie(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new IllegalStateException(s"rename failed: $src -> $dst")
 
@@ -316,13 +298,13 @@ object FactStore {
     * table whose dir exists there).
     */
   private def eachBatchLayer(spark: SparkSession, root: String, batchId: String)(
-      f: (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path, String) => Unit): Unit = {
+      f: (FileSystem, Path, String) => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     tables.foreach { case (t, key) =>
-      val table = new org.apache.hadoop.fs.Path(s"$root/$t")
+      val table = new Path(s"$root/$t")
       val fs = table.getFileSystem(conf)
       if (fs.exists(table))
-        fs.globStatus(new org.apache.hadoop.fs.Path(s"$root/$t/$key=*/batch_id=$batchId"))
+        fs.globStatus(new Path(s"$root/$t/$key=*/batch_id=$batchId"))
           .foreach(st => f(fs, st.getPath, t))
     }
   }
@@ -336,7 +318,7 @@ object FactStore {
       batchId: String, replace: Boolean = false): Unit =
     eachBatchLayer(spark, from, batchId) { (fs, layer, t) =>
       val part = layer.getParent.getName // e.g. order_date=2024-01-01
-      val dest = new org.apache.hadoop.fs.Path(s"$to/$t/$part/batch_id=$batchId")
+      val dest = new Path(s"$to/$t/$part/batch_id=$batchId")
       fs.mkdirs(dest.getParent)
       if (replace && fs.exists(dest)) fs.delete(dest, true)
       renameOrDie(fs, layer, dest)
@@ -350,7 +332,7 @@ object FactStore {
 
   private def clearStash(spark: SparkSession, storeDir: String, batchId: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(stashDir(storeDir, batchId))
+    val p = new Path(stashDir(storeDir, batchId))
     p.getFileSystem(conf).delete(p, true)
   }
 
@@ -367,58 +349,73 @@ object FactStore {
       .parquet(s"$storeDir/items_daily")
 
   // --------------------------------------------------------------------------
-  // Reads (the pruned paths) — catalog-managed partitions
+  // Reads (the pruned paths) — named partition dirs
   // --------------------------------------------------------------------------
 
-  /** Store tables are read through the session CATALOG, not `read.parquet`:
-    * a path read re-discovers every partition directory on every query
-    * (measured 3-8 s against 2400 date partitions locally; a full object-
-    * store LIST at production scale), while a catalog table resolves the
-    * partition predicate against partition METADATA and lists only the
-    * matching directories — the metastore discipline a 100 TB warehouse
-    * runs on. The in-memory session catalog gives the same pruning here
-    * without external infrastructure; registration is ingest-time work.
+  /** The one store reader: `table`'s rows in the partitions of `dates` (ISO
+    * dates; every partition when empty), read by path from the existing
+    * `<key>=<date>` dirs with `basePath`. Only the named dirs are listed, so
+    * a KPI read or a redelivery check costs its own dates, not the store's
+    * history (a path read of the whole table re-listed ~2400 dirs per query,
+    * PERF.md round 2); a date with no dir is skipped.
+    *
+    * The schema is given, never inferred: the data columns from one layer
+    * file's footer (read on the driver, so building the frame starts no
+    * Spark job), then the partition key as DATE and `batch_id` as STRING.
+    * Batch ids that look like dates (the pipeline's) thus read the same
+    * before and after [[compact]] seals them under `__sealed__`. The footer
+    * comes from the named dirs, else from any partition (one listing of the
+    * table dir); a table with no data file yet has no schema to give and
+    * fails as an inferring read does.
     */
-  private def tableName(storeDir: String, name: String): String =
-    s"graft_${md5hex(storeDir).take(12)}_$name"
-
-  private def readStore(spark: SparkSession, storeDir: String, name: String): DataFrame = {
-    val tbl = tableName(storeDir, name)
-    if (!spark.catalog.tableExists(tbl)) {
-      spark.sql(s"CREATE TABLE $tbl USING parquet LOCATION '$storeDir/$name'")
-      spark.sql(s"ALTER TABLE $tbl RECOVER PARTITIONS")
+  private def read(spark: SparkSession, storeDir: String, table: String,
+      dates: Seq[String]): DataFrame = {
+    val key = tables(table)
+    val root = new Path(s"$storeDir/$table")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def partitions = if (!fs.exists(root)) Seq.empty[Path]
+      else fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith(s"$key=")).toSeq
+    val dirs = if (dates.isEmpty) partitions
+      else dates.map(d => new Path(root, s"$key=$d")).filter(fs.exists)
+    def layerFile(ds: Seq[Path]) = ds.iterator
+      .flatMap(d => fs.listStatus(d)).flatMap(layer => fs.listStatus(layer.getPath))
+      .map(_.getPath).find(_.getName.endsWith(".parquet"))
+    layerFile(dirs).orElse(layerFile(partitions)) match {
+      case Some(file) =>
+        val schema = StructType(rowSchema(fs, file).fields :+
+          StructField(key, DateType) :+ StructField("batch_id", StringType))
+        // no dir to read: an empty frame (a path read of none logs a warning)
+        if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+        else spark.read.schema(schema).option("basePath", root.toString)
+          .parquet(dirs.map(_.toString): _*)
+      case None => spark.read.parquet(root.toString)
     }
-    spark.table(tbl)
   }
 
-  /** Re-sync catalog partition metadata after a path-level layer change
-    * (no-op for tables not yet registered — they discover everything at
-    * first read). SYNC rather than RECOVER: a rerun or compaction can REMOVE
-    * layer dirs, and a stale catalog entry pointing at a deleted dir would
-    * break every later pruned read of that partition.
-    */
-  def syncCatalog(spark: SparkSession, storeDir: String): Unit =
-    Seq("consolidated", "orders_enriched", "items_daily")
-      .foreach(syncCatalogTable(spark, storeDir, _))
-
-  private def syncCatalogTable(spark: SparkSession, storeDir: String, name: String): Unit = {
-    val tbl = tableName(storeDir, name)
-    if (spark.catalog.tableExists(tbl))
-      spark.sql(s"MSCK REPAIR TABLE $tbl SYNC PARTITIONS")
+  /** The row schema Spark wrote into a parquet file's footer. */
+  private def rowSchema(fs: FileSystem, file: Path): StructType = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, fs.getConf))
+    try DataType.fromJson(r.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
+    finally r.close()
   }
 
-  /** Item-grain consolidated fact; `order_date` is the partition column, so
-    * an `isin`/equality filter on it prunes to the matching partitions via
-    * catalog metadata (PartitionFilters in the scan).
+  /** Item-grain consolidated fact in the partitions of `dates` (all when
+    * empty). An `isin`/equality filter on `order_date` still becomes the
+    * scan's PartitionFilters (PlanSpec).
     */
-  def consolidated(spark: SparkSession, storeDir: String): DataFrame =
-    readStore(spark, storeDir, "consolidated")
+  private[graft] def consolidated(spark: SparkSession, storeDir: String,
+      dates: Seq[Date] = Nil): DataFrame =
+    read(spark, storeDir, "consolidated", dates.map(_.toString))
 
-  def ordersEnriched(spark: SparkSession, storeDir: String): DataFrame =
-    readStore(spark, storeDir, "orders_enriched")
+  private[graft] def ordersEnriched(spark: SparkSession, storeDir: String,
+      dates: Seq[Date] = Nil): DataFrame =
+    read(spark, storeDir, "orders_enriched", dates.map(_.toString))
 
-  def itemsDaily(spark: SparkSession, storeDir: String): DataFrame =
-    readStore(spark, storeDir, "items_daily")
+  private[graft] def itemsDaily(spark: SparkSession, storeDir: String,
+      dates: Seq[Date] = Nil): DataFrame =
+    read(spark, storeDir, "items_daily", dates.map(_.toString))
 
   // --------------------------------------------------------------------------
   // Fixture materialization (build-once per source dir)
@@ -430,24 +427,10 @@ object FactStore {
     * the store as batches arrive; queries only ever pay the pruned read.
     */
   def ensureFixture(spark: SparkSession, srcDir: String,
-      build: SparkSession => (DataFrame, DataFrame, DataFrame)): String = synchronized {
-    val dir = ArtifactStore.ensure(srcDir, "factstore", Version) { dir =>
+      build: SparkSession => (DataFrame, DataFrame, DataFrame)): String =
+    ArtifactStore.ensure(srcDir, "factstore", Version) { dir =>
       val (cons, orders, items) = build(spark)
       // full-fixture build: the whole corpus is one "batch" layer
       stageLayers(spark, dir, "full", cons, orders, items)
     }
-    // catalog registration (schema inference + partition recovery) is part
-    // of ingest: queries then resolve partitions from catalog metadata.
-    // Once per store dir, like the build: re-registering measured ~13 ms
-    // per call (sf0.01, 4 vCPUs), paid by every store-backed KPI query.
-    if (!registered(dir)) {
-      Seq("consolidated", "orders_enriched", "items_daily")
-        .foreach(n => readStore(spark, dir, n))
-      registered += dir
-    }
-    dir
-  }
-
-  /** Fixture store dirs whose tables are registered in the catalog. */
-  private val registered = scala.collection.mutable.Set[String]()
 }

@@ -407,8 +407,8 @@ class PipelineSpec extends AnyFunSuite {
     val expected = prunedRead()
     assert(expected == Set(1L, 2L))
     // the staging phase dominates compaction wall-time: a reader anywhere in
-    // it must get exactly the pre-seal rows through the still-defined catalog
-    // table (the swap+sync tail is the documented single-writer boundary)
+    // it must get exactly the pre-seal rows from the untouched live partition
+    // dirs (the two-rename swap is the documented single-writer boundary)
     val observed = scala.collection.mutable.ArrayBuffer[(String, Set[Long])]()
     FactStore.compactPhaseHook = (phase, table) =>
       if (phase == "staged" && table == "orders_enriched")
@@ -418,6 +418,69 @@ class PipelineSpec extends AnyFunSuite {
     assert(observed.toList == List(("staged", expected)),
       s"mid-compaction pruned read diverged: $observed")
     assert(prunedRead() == expected, "post-seal read must return the same rows")
+  }
+
+  test("compact: date-like batch ids read batch_id as a string before and after sealing") {
+    import graft.sources.FactStore
+    import org.apache.spark.sql.types.StringType
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-sealtype").toString + "/store"
+    def oe(rows: (Long, String)*) = rows
+      .map { case (id, d) => (id, id * 10, 0, java.sql.Date.valueOf(d), 5.0) }
+      .toDF("order_id", "user_id", "returned_order_flag", "order_date", "order_revenue")
+    def cons(rows: (Long, String)*) = rows
+      .map { case (id, d) => (id, "CAT_A", java.sql.Date.valueOf(d)) }
+      .toDF("order_id", "category", "order_date")
+    def idaily(d: String) =
+      Seq((java.sql.Date.valueOf(d), 1L)).toDF("date_key", "total_items_sold_daily")
+    // the pipeline's batch ids are its delivery dates
+    FactStore.upsertBatch("2024-01-01", cons(1L -> "2024-01-01"),
+      oe(1L -> "2024-01-01"), idaily("2024-01-01"), dir)
+    FactStore.upsertBatch("2024-01-02", cons(2L -> "2024-01-01", 3L -> "2024-01-02"),
+      oe(2L -> "2024-01-01", 3L -> "2024-01-02"), idaily("2024-01-02"), dir)
+    // every table read whole: its batch_id type and its rows without it
+    def store() = Seq(FactStore.consolidated(spark, dir), FactStore.ordersEnriched(spark, dir),
+      FactStore.itemsDaily(spark, dir))
+      .map(df => (df.schema("batch_id").dataType, df.drop("batch_id").collect().toSet))
+    val before = store()
+    // seals 2024-01-01 under batch_id=__sealed__, which no DATE can hold
+    FactStore.compact(spark, dir, horizon = "2024-01-01")
+    val after = store()
+    assert(after.map(_._2) == before.map(_._2), "compaction must not change the rows")
+    assert((before ++ after).forall(_._1 == StringType),
+      s"batch_id types before/after: ${before.map(_._1)} / ${after.map(_._1)}")
+    assert(new java.io.File(s"$dir/orders_enriched/order_date=2024-01-01").list().toSeq ==
+      Seq(s"batch_id=${FactStore.SealedId}"))
+  }
+
+  test("store KPIs for a date only orders_enriched holds: 0 items, no missing-path failure") {
+    import graft.operators.Kpi
+    val root = setupBatch("itemless")
+    assert(Pipeline.run(spark, root.toString, "2024-01-01").isInstanceOf[Pipeline.Succeeded])
+    // day 2 delivers one order and no item: consolidated and items_daily get
+    // no dir for 2024-01-02
+    write(root, "raw/orders/2024-01-02/orders_part0.csv",
+      """order_id,user_id,created_at,returned_at
+        |30,300,2024-01-02 00:00:00,""".stripMargin)
+    write(root, "raw/order_items/2024-01-02/order_items_part0.csv",
+      "order_id,product_id,sale_price,returned_at,created_at")
+    assert(Pipeline.run(spark, root.toString, "2024-01-02") == Pipeline.Succeeded("2024-01-02", 0L, 1L))
+    val facts = s"$root/facts"
+    assert(!Files.exists(Paths.get(s"$facts/items_daily/date_key=2024-01-02")))
+    assert(!Files.exists(Paths.get(s"$facts/consolidated/order_date=2024-01-02")))
+    val (d1, d2) = (java.sql.Date.valueOf("2024-01-01"), java.sql.Date.valueOf("2024-01-02"))
+    val daily = Kpi.orderKpisFromStore(spark, facts, Seq(d2))
+    assert(daily.schema == Kpi.orderKpisFromStore(spark, facts, Seq(d1)).schema)
+    val row = daily.collect().toSeq match {
+      case Seq(r) => r
+      case rs => fail(s"expected one 2024-01-02 row, got $rs")
+    }
+    assert(row.getAs[Int]("total_items_sold") == 0 && row.getAs[Long]("total_orders") == 1L
+      && row.getAs[Double]("total_revenue") == 0.0)
+    assert(Kpi.categoryKpisFromStore(spark, facts, Seq(d2)).isEmpty)
+    val sunk = KeyValueSink.readTable(spark, s"$root/kpis/daily_kpis")
+      .filter(org.apache.spark.sql.functions.col("date_key") === "2024-01-02").collect()
+    assert(sunk.length == 1 && sunk.head.getAs[Int]("total_items_sold") == 0)
   }
 
   test("tracker: crash after the trigger mark rolls back mark AND file moves (retryable)") {

@@ -588,6 +588,15 @@ class PlanSpec extends AnyFunSuite {
       s"order_date isin did not become a PartitionFilter: ${dailyScan.get.partitionFilters}")
   }
 
+  test("building the store-backed KPI reads starts no Spark job") {
+    val store = Kpi.ensureFixtureStore(spark, TestSession.sf)
+    val jobs = JobCount(spark) {
+      Kpi.orderKpisFromStore(spark, store, Kpi.incrementalDates)
+      Kpi.categoryKpisFromStore(spark, store, Kpi.incrementalDates)
+    }
+    assert(jobs == 0, s"building the store KPI frames started $jobs Spark jobs")
+  }
+
   test("heavy hitters is a single chain: one corpus scan, no join") {
     // r11: the join-back formulation planned the vocab subtree twice and
     // AQE's stage cache did NOT dedupe it for this shape (measured 2x cpu
